@@ -1,13 +1,13 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Entry-point contract: the flagship query plus the registered query set.
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs each
-``queries()[name]`` at sf=0.01 and compares it against the matching
-``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash → CORRECTNESS_r{N}.json).
+``entry(spark)`` is the smoke check. ``queries()[name]`` runs a
+registered query over a table directory, and ``oracle_sql()[name]`` is
+the DuckDB SQL it must match (row count + schema + order-insensitive
+value hash; ``tests/test_oracle.py`` runs that comparison).
 
-The real implementations live in ``takuan_spark.queries`` — each query is
-registered there as a (Spark builder, DuckDB oracle SQL) pair so the two
-dialects stay in sync next to each other.
+The implementations live in ``takuan_spark.queries.takuan`` — each query
+is registered there as a (Spark builder, DuckDB oracle SQL) pair so the
+two dialects stay in sync next to each other.
 """
 
 from __future__ import annotations
@@ -33,10 +33,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2 / §2.2."""
+    """Every registered query, by name."""
     return all_queries()
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL for every SQL-expressible query."""
+    """DuckDB oracle SQL for every registered query."""
     return all_oracle_sql()

@@ -1,28 +1,34 @@
-"""takuan_spark — a PySpark-native analytics engine with the query and
-data-processing capabilities of evilsocket/takuan.
+"""takuan_spark — a PySpark log-analytics service with the semantics of
+evilsocket/takuan.
 
-The reference (/root/reference, ~1,200 LoC of Go) is a streaming
-log-analytics service: tail log files, regex-parse lines into tokens,
-match attack-detection rules, geo-enrich, micro-batch to a database, and
-periodically emit per-attacker and per-country aggregate reports.
+The reference (~1,200 LoC of Go) is a streaming log-analytics service:
+tail log files, regex-parse lines into tokens, match attack-detection
+rules, geo-enrich, micro-batch to a database, and periodically emit
+per-attacker and per-country aggregate reports.
 
-This package re-expresses those semantics Spark-first:
+This package re-expresses that service Spark-first
+(``python -m takuan_spark``):
 
-- ``config``     — the "query language": a declarative sensor/pipeline spec
-                   (same YAML shape as the reference's config.example.yml)
-                   compiled to DataFrame plans. Ref: core/config.go.
+- ``config``     — the declarative sensor/pipeline spec (same YAML shape
+                   as the reference's config.example.yml).
+                   Ref: core/config.go.
+- ``plans``      — config → DataFrame plans (tokenize → rules →
+                   datetime), shared by batch and streaming.
 - ``operators``  — parse (regex tokenize projection), rules (ordered
                    first-match-wins predicate labeling), enrich (broadcast
-                   dim joins), reports (group-by/top-k report queries),
-                   plus the north-star extensions: dedup, similarity,
-                   text analysis, multimodal column plumbing.
-- ``sources``    — batch + streaming readers (text/json/csv/parquet).
-- ``sinks``      — set-oriented writers (parquet/csv/jdbc-shaped),
-                   foreachBatch helpers.
+                   geo / reverse-DNS joins), reports (per-address report
+                   and country top-k).
+- ``sources``    — batch/streaming readers and the byte-offset file-tail
+                   data source.
+- ``sinks``      — parquet/CSV writers, the exactly-once DuckDB and JDBC
+                   sinks, and the report publishers (file drop, git,
+                   webhook).
 - ``streaming``  — Structured Streaming wrap of the compiled pipeline
-                   (micro-batch trigger, checkpointing, error quarantine).
-- ``queries``    — the declared query registry: every operator from
-                   SURVEY.md §2 exposed as (spark_builder, oracle_sql).
+                   (micro-batch trigger, checkpointing, quarantine) and
+                   the incremental report fold.
+- ``queries``    — the reference's report semantics as named
+                   (spark_builder, oracle_sql) pairs over the test
+                   tables; ``--list-queries`` prints them.
 
 Everything is built on the DataFrame API so Catalyst provides predicate
 pushdown, column pruning, join planning and whole-stage codegen; Python

@@ -173,8 +173,9 @@ def _emit_csv(df) -> None:
 
 
 def _run_query(args) -> int:
-    """--query: run one registered engine query by name over a table
-    directory (the same builders the driver/bench run) and print CSV."""
+    """--query: run one registered query by name over a table directory
+    (the builders ``tests/test_oracle.py`` checks against DuckDB) and
+    print CSV."""
     import sys
 
     from takuan_spark.queries import REGISTRY, _load
@@ -188,7 +189,7 @@ def _run_query(args) -> int:
     if not args.sf_dir or not os.path.isdir(args.sf_dir):
         print(
             "error: --query requires --sf-dir pointing at a directory of "
-            "the engine tables (region/nation/.../documents parquet)",
+            "the test tables (events/customer/nation/documents parquet)",
             file=sys.stderr,
         )
         return 2
@@ -265,14 +266,14 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument(
         "--query",
         default=None,
-        help="run one registered engine query by name over --sf-dir "
+        help="run one registered report query by name over --sf-dir "
         "and print CSV to stdout (see --list-queries)",
     )
     ap.add_argument(
         "--sf-dir",
         default=None,
         help="table directory for --query (parquet files named "
-        "region/nation/customer/.../documents/embeddings)",
+        "events/customer/nation/documents)",
     )
     ap.add_argument(
         "--list-queries",

@@ -1,28 +1,16 @@
-"""The declared query registry — the engine's public query surface.
+"""The declared query registry: the reference's report semantics as
+named queries over the ``events`` table.
 
-Every operator from SURVEY.md §2 (and the §2.2 north-star extensions) is
-exposed as a named query: a Spark DataFrame builder plus, when the
-semantics are ANSI-SQL-expressible, the equivalent DuckDB oracle SQL.
-The driver runs both sides at sf0.01 and hash-compares (row-count +
-schema + order-insensitive value hash), so:
+Each query is a Spark DataFrame builder plus the equivalent DuckDB
+oracle SQL. ``tests/test_oracle.py`` runs both sides and compares them
+(row count + schema + order-insensitive value hash), so:
 
 - every computed column is aliased identically in both dialects;
 - double aggregates are rounded in both (summation order differs between
-  engines; the true values agree to ~1e-8 relative, far inside the
-  rounding guard);
+  engines);
 - counts are CAST to BIGINT in DuckDB (its SUM(int) widens to HUGEINT);
 - orderings carry stable tiebreak keys, and string encodings (counter
-  segments, fingerprints) are defined deterministically.
-
-Since round 5 EVERY registered query carries an oracle — the sketch
-families (MinHash, SimHash, LSH, IVF, PQ) were made externally
-reproducible via md5-derived hashes and literal-embedded
-hyperplanes/centroids/codebooks (tests/test_northstar.py additionally
-pins their semantics against independent Python implementations), and
-``ns_minhash_prod_mode`` — whose xxhash64 PRODUCTION hash family no
-external SQL engine can reproduce — now registers the family-PARITY
-claim as its query, so the oracle only needs the SQL-expressible md5
-side and the driver hash check covers the production path too.
+  segments) are defined deterministically.
 """
 
 from __future__ import annotations
@@ -46,229 +34,28 @@ class QuerySpec:
 REGISTRY: dict[str, QuerySpec] = {}
 
 
-def _released(fn: QueryFn) -> QueryFn:
-    """Release the PREVIOUS query's materialize() caches when this one
-    starts. Builders return lazy frames whose persisted inputs are only
-    consumed by the caller's later action, so release-on-return would
-    recompute exactly what materialize() exists to share — the earliest
-    safe point is the next query's entry. Harness actions (bench.py,
-    scale_probe.py) additionally clear per action; this wrapper covers
-    long-lived sessions the harness doesn't own (the driver's
-    correctness run, pytest's shared session)."""
-    import functools
-
-    from takuan_spark.operators.skew import release_materialized
-
-    @functools.wraps(fn)
-    def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        release_materialized()
-        return fn(spark, sf_dir)
-
-    return wrapped
-
-
 def query(name: str, oracle_sql: str | None, description: str = ""):
-    """Register a (spark builder, oracle sql) pair under ``name``.
-
-    The REGISTRY holds the builder wrapped by :func:`_released` (cache
-    hygiene at query boundaries); the decorator returns the RAW
-    function, so operators and tests composing builders directly are
-    untouched."""
+    """Register a (spark builder, oracle sql) pair under ``name``."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
-        REGISTRY[name] = QuerySpec(
-            name, _released(fn), oracle_sql, description or fn.__doc__ or ""
-        )
+        REGISTRY[name] = QuerySpec(name, fn, oracle_sql, description or fn.__doc__ or "")
         return fn
 
     return deco
 
 
-# The driver records CORRECTNESS rows for the FIRST ~50 entries of
-# queries() in dict order (verified in r1 and r2: both files hold
-# exactly the first 50 names of that round's ordering), so the dict is
-# ordered explicitly each round as a coverage-rotation schedule:
-#   1. queries whose implementation or oracle CHANGED this round
-#      (their old green rows no longer certify the current code);
-#   2. staleness backfill — every remaining query ordered by its
-#      LAST-GREEN round ascending, so the window always re-certifies
-#      the oldest evidence first.
-# Round 13 (optimization round 2): the 11 rows whose implementation
-# changed this round lead — ns_simhash_neardup (Hamming filter moved
-# before the pair-dedup exchange), ns_semdedup (cell-assignment GEMM
-# snapshotted), q_stream_rocksdb_state + q_stream_window_fold (the
-# shared _run_windowed_counts helper gained scoped RocksDB changelog
-# checkpointing), the five applyInPandasWithState rows whose update
-# fns were vectorized (q_stream_bruteforce_{alerts,unordered,restart},
-# q_stream_custom_state, q_stream_unordered_state), and the two
-# live-tail rows whose log rendering collapsed to one job
-# (q_stream_multi_sensor, q_tail_source_counts). Repo-wide r13
-# changes (local-FS checksum/committer conf, snapshot() probe,
-# schema-cache mtime key) touch every path and are certified by the
-# full local oracle sweep, as r12's repo-wide changes were. The
-# remaining 39 slots backfill the stalest evidence: r12's window
-# retired those rows' r5/r6-stale debt, so the head of the tail is
-# now the r7-green class (mm_scene_cuts onward; mm_audio_segments and
-# mm_binaryfile_ingest were certified inside r12's window). r12's
-# just-recertified 50 rotate to the back.
-# Anything past the cap rotates forward next round; every declared
-# query is still oracle-verified locally by tests/test_oracle.py.
-PRIORITY: list[str] = [
-    # -- 1. r13: implementation CHANGED this round ------------------
-    "ns_simhash_neardup", "ns_semdedup", "q_stream_rocksdb_state",
-    "q_stream_window_fold", "q_stream_bruteforce_alerts",
-    "q_stream_bruteforce_unordered", "q_stream_bruteforce_restart",
-    "q_stream_custom_state", "q_stream_unordered_state",
-    "q_stream_multi_sensor", "q_tail_source_counts",
-    # -- 2. staleness backfill, last-green round ascending (r7 head
-    #    first; the first 39 rows here complete the 50-slot window) --
-    "mm_scene_cuts", "ns_chunk_documents", "ns_cms_error",
-    "ns_cms_heavy_hitters", "ns_cms_join_size", "ns_dp_histogram",
-    "ns_embedding_centroids", "ns_ivf_probe", "ns_ivf_topk", "ns_ivfpq_probe",
-    "ns_lsh_probe", "ns_lsh_similarity_topk", "ns_minhash_estimate_error",
-    "ns_minhash_prod_mode", "ns_minhash_recall", "ns_pack_sequences",
-    "ns_pii_redact", "ns_pq_probe", "ns_pq_rerank", "ns_pq_topk",
-    "ns_rag_pipeline", "ns_random_projection", "ns_repetition_filter",
-    "ns_sample_to_mix", "q11_part_value_share", "q13_customer_distribution",
-    "q15_top_supplier", "q21_suppliers_kept_waiting", "q2_min_cost_supplier",
-    "q7_nation_volume_shipping", "q8_market_share", "q9_product_type_profit",
-    "q_distinct_count", "q_first_value_per_group", "q_gap_fill_interpolate",
-    "q_hypertable_rollup", "q_salted_agg", "q_stream_bloom_fold",
-    "q_stream_cms_fold", "q_stream_hist_fold", "q_stream_hll_fold",
-    "q_stream_minhash_fold", "q_stream_moments_fold", "q_stream_session_fold",
-    "mm_image_resize", "mm_phash_neardup", "ns_ann_recall", "ns_bitext_mining",
-    "ns_blocked_linkage", "ns_bm25_search", "ns_code_detect",
-    "ns_containment_neardup", "ns_dedup_clusters", "ns_dedup_sweep",
-    "ns_domain_filter", "ns_domain_stats", "ns_gopher_rules",
-    "ns_jaccard_neardup", "ns_kmv_distinct", "ns_lsh_band_tuning",
-    "ns_minhash_lsh_neardup", "ns_pack_efficiency", "ns_quantile_sketch_error",
-    "ns_record_linkage", "ns_sft_mask_stats", "ns_simhash_radius_tuning",
-    "ns_snapshot_diff", "ns_vocab_coverage", "ns_weighted_sample",
-    "q12_priority_by_returnflag", "q16_supplier_count_by_part",
-    "q17_small_quantity_revenue", "q18_large_orders",
-    "q20_promo_share_suppliers", "q22_idle_rich_customers",
-    "q_asof_nearest_tolerance", "q_except_all", "q_graph_adamic_adar",
-    "q_graph_kcore", "q_graph_link_prediction", "q_histogram",
-    "q_mv_incremental", "q_native_sketch_parity", "q_null_safe_join",
-    "q_orc_partition_prune", "q_percentiles", "q_range_partition_balance",
-    "q_schema_evolution", "q_seasonality_profile", "q_sql_function_surface",
-    "q_udtf_tokenize", "q_watermark_audit", "ns_bm25_batch",
-    "ns_bpe_merge_candidates", "ns_cluster_purity", "ns_cluster_sample",
-    "ns_contrastive_triplets", "ns_decontaminate", "ns_dup_size_histogram",
-    "ns_effective_corpus_size", "ns_epoch_novelty", "ns_hard_negatives",
-    "ns_hll_distinct", "ns_keyword_tagging", "ns_kmv_set_ops",
-    "ns_length_bucketing", "ns_length_outliers", "ns_shard_assign",
-    "ns_substring_dedup", "ns_token_entropy", "ns_unicode_normalize",
-    "ns_winsorized_stats", "q_corr_regression", "q_graph_pagerank",
-    "q_key_skew_profile", "q_quantile_sketch", "q_recursive_cte",
-    "q_rolling_median", "q_scd2_intervals", "q_sliding_distinct",
-    "q_sliding_distinct_hll", "q_sql_pipe_syntax", "q_state_store_reader",
-    "q_stateful_alerts", "q_stateful_profile", "q_stream_dedup_replay",
-    "q_stream_late_drop", "q_stream_session_window", "q_stream_static_join",
-    "q_unpivot_metrics", "q_window_range_frame", "q_zorder_locality",
-    "ns_boilerplate_strip", "ns_class_rebalance", "ns_dataset_card",
-    "ns_embedding_qc", "ns_importance_weights", "ns_k_anonymity",
-    "ns_kmeans_assign", "ns_kmeans_clusters", "ns_leakage_safe_split",
-    "ns_mixture_schedule", "ns_ngram_lm_stats", "ns_perplexity_filter",
-    "ns_quantile_bins", "ns_source_overlap", "ns_token_pmi",
-    "ns_tokenizer_fertility", "q_backfill_overwrite", "q_bloom_prefilter_prod",
-    "q_cdc_latest", "q_cdc_merge", "q_csv_roundtrip", "q_dq_audit",
-    "q_event_dedup_window", "q_jsonl_roundtrip", "q_log_pipeline_e2e",
-    "q_salted_join", "q_stream_checkpoint_restart", "q_stream_complete_mode",
-    "q_stream_interval_join", "q_stream_interval_join_outer",
-    "q_stream_report_fold", "q_stream_sketch_fold",
-    "q_stream_static_join_shuffle", "q_stream_update_mode",
-    "q_stream_update_windowed", "q_touch_attribution", "q_variant_extract",
-    "q_xml_roundtrip", "q_zonemap_prune_compare", "takuan_address_report",
-    "takuan_country_topk", "takuan_geo_enrich_join", "takuan_hourly_window",
-    "takuan_json_extract", "takuan_regex_tokenize", "takuan_rule_filter",
-    "takuan_rule_label", "q_stream_interval_join_full", "q_sql_scripting",
-    "q_bucketed_join", "ns_cardinality_sketch_error", "q_ntile_deciles",
-    "ns_duplication_pareto", "ns_dedup_pipeline", "ns_score_calibration",
-    "q_bloom_prefilter", "q_funnel", "q_session_window", "q_sliding_window",
-    "takuan_rdns_enrich", "mm_feature_extract", "mm_frame_sample",
-    "ns_burstiness", "ns_dedup_exact", "ns_dedup_incremental",
-    "ns_deletion_cascade", "ns_dup_representative", "ns_embedding_neardup",
-    "ns_embedding_neardup_lsh", "ns_filter_funnel", "ns_int8_quant_error",
-    "ns_ks_drift", "ns_mad_outliers", "ns_manifest_hash",
-    "ns_pca_power_iteration", "ns_pii_risk", "ns_quantile_normalize",
-    "ns_source_dedup_matrix", "ns_template_mining", "ns_text_stats",
-    "ns_vocab_oov", "ns_zipf_fit", "q_asof_join", "q_cohort_retention",
-    "q_community_labels", "q_compaction_bins", "q_ewma_anomaly",
-    "q_graph_triangles", "q_interarrival_stats", "q_local_clustering",
-    "q_mean_shift_changepoint", "q_pivot_conditional", "q_stats_agg",
-    "q_stream_ann_fold",
-    # -- 3. r12's just-certified window rotates to the back ----------
-    "q_stream_interval_join_right", "q_interval_overlap_join",
-    "ns_text_augment", "mm_media_summary", "ns_kcenter_coreset",
-    "ns_matryoshka_qc", "q_stream_dedup_fold", "ns_curation_pipeline",
-    "ns_fingerprint", "ns_knn_join", "ns_lang_id", "ns_quality_score",
-    "ns_similarity_topk", "ns_stratified_sample", "ns_tfidf_topterms",
-    "ns_winnow_fingerprint", "q10_returned_items", "q14_promo_revenue",
-    "q19_disjunctive_filter", "q1_pricing_summary", "q3_shipping_priority",
-    "q4_order_priority", "q5_local_supplier_volume", "q6_forecast_revenue",
-    "q_anti_join", "q_array_functions", "q_correlated_subquery", "q_cube",
-    "q_date_functions", "q_full_outer_join", "q_grouping_sets",
-    "q_ip_range_join", "q_ip_range_join_bucketed", "q_math_functions",
-    "q_pandas_udaf", "q_rollup", "q_scalar_subquery", "q_semi_join",
-    "q_set_ops", "q_string_functions", "q_top_customers", "q_union_distinct",
-    "q_window_lag_lead", "q_window_rank", "mm_audio_segments",
-    "mm_binaryfile_ingest",
-]
-
-
-def _ordered() -> list[QuerySpec]:
-    known = [REGISTRY[n] for n in PRIORITY if n in REGISTRY]
-    rest = [s for n, s in REGISTRY.items() if n not in PRIORITY]
-    return known + rest
-
-
 def all_queries() -> dict[str, QueryFn]:
     _load()
-    return {s.name: s.builder for s in _ordered()}
+    return {n: s.builder for n, s in REGISTRY.items()}
 
 
 def all_oracle_sql() -> dict[str, str]:
     _load()
-    return {
-        s.name: s.oracle_sql for s in _ordered() if s.oracle_sql is not None
-    }
-
-
-_loaded = False
+    return {n: s.oracle_sql for n, s in REGISTRY.items() if s.oracle_sql is not None}
 
 
 def _load() -> None:
-    """Import the query modules (registration side effect), once."""
-    global _loaded
-    if _loaded:
-        return
-    from takuan_spark.queries import (  # noqa: F401
-        advanced,
-        bloom_filter,
-        cdc,
-        corpus_ops,
-        curation,
-        embedding_ops,
-        governance,
-        graph,
-        ingest,
-        linkage,
-        maintenance,
-        multimodal,
-        northstar,
-        prod_mode,
-        relational,
-        sketches,
-        stateful_analog,
-        stream_analog,
-        takuan,
-        training,
-        udtf_surface,
-        timeseries,
-        web,
-    )
-
-    _loaded = True
+    """Import the query module (registration side effect)."""
+    from takuan_spark.queries import takuan  # noqa: F401

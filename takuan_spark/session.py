@@ -100,73 +100,60 @@ def get_spark(
     #   commit with a ClassCastException) — so instead the cached
     #   instance's checksum behavior is turned off post-construction
     #   below (setWriteChecksum/setVerifyChecksum).
-    # Env-reversible for A/B: TAKUAN_LOCAL_FS_RAW=0 restores checksummed.
-    raw_local_fs = os.environ.get("TAKUAN_LOCAL_FS_RAW", "1") != "0"
-    if raw_local_fs:
-        builder = builder.config(
-            "spark.hadoop.fs.AbstractFileSystem.file.impl",
-            "org.apache.hadoop.fs.local.RawLocalFs",
-        )
-        # Spark 4.1's own checkpoint-file checksums (SQLConf
-        # STREAMING_CHECKPOINT_FILE_CHECKSUM_ENABLED, default true — a
-        # 4.x addition) write one extra .crc per state-store delta /
-        # metadata file per micro-batch, doubling checkpoint file ops
-        # the same way Hadoop's ChecksumFileSystem does. Same trade as
-        # above on a local bench: scratch checkpoints are created and
-        # consumed inside one timed run on ext4, where the corruption
-        # this detects (partial remote writes) cannot occur silently.
-        # On long-lived production checkpoints on object storage, leave
-        # it on — there it is the only integrity layer.
-        builder = builder.config(
-            "spark.sql.streaming.checkpoint.fileChecksum.enabled", "false"
-        )
+    builder = builder.config(
+        "spark.hadoop.fs.AbstractFileSystem.file.impl",
+        "org.apache.hadoop.fs.local.RawLocalFs",
+    )
+    # Spark 4.1's own checkpoint-file checksums (SQLConf
+    # STREAMING_CHECKPOINT_FILE_CHECKSUM_ENABLED, default true — a
+    # 4.x addition) write one extra .crc per state-store delta /
+    # metadata file per micro-batch, doubling checkpoint file ops
+    # the same way Hadoop's ChecksumFileSystem does. On long-lived
+    # production checkpoints on object storage, leave it on — there it
+    # is the only integrity layer.
+    builder = builder.config(
+        "spark.sql.streaming.checkpoint.fileChecksum.enabled", "false"
+    )
     # Output-commit cost: the default FileOutputCommitter v1 commits in
     # two rename phases (task attempt -> task committed -> job final),
-    # so every file written to a scratch/maintained table moves twice
-    # and the job commit is a serial driver-side loop over task dirs.
-    # v2 renames task output STRAIGHT to the final location at task
-    # commit — one rename per file, no O(files) job-commit phase. The
-    # trade (documented upstream in MAPREDUCE-6336/SPARK-20107): a job
-    # that FAILS mid-commit can leave partial files behind. Every write
-    # in this engine lands in a scratch tree that is deleted and
-    # rebuilt per run (stream_analog epoch folds, roundtrips, bucketed
-    # loads), or an epoch-partition dynamic overwrite whose reader
-    # tolerates re-runs, so a failed job is re-run from rmtree — the
-    # partial-file window cannot be read. On real deployments writing
-    # to object storage this knob is superseded by cloud-native
-    # committers (magic/staging), which make the same one-move trade
-    # safely. _SUCCESS markers are also skipped: nothing in the engine
-    # or its readers consumes them; each is one extra create+close per
-    # write job. Env-reversible for A/B: TAKUAN_COMMITTER_V2=0.
-    if os.environ.get("TAKUAN_COMMITTER_V2", "1") != "0":
-        builder = builder.config(
-            "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2"
-        ).config(
-            "spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs",
-            "false",
-        )
+    # so every file written moves twice and the job commit is a serial
+    # driver-side loop over task dirs. v2 renames task output STRAIGHT
+    # to the final location at task commit — one rename per file, no
+    # O(files) job-commit phase. The trade (documented upstream in
+    # MAPREDUCE-6336/SPARK-20107): a job that FAILS mid-commit can leave
+    # partial files behind, and that includes the service's events
+    # table. On real deployments writing to object storage this knob is
+    # superseded by cloud-native committers (magic/staging), which make
+    # the same one-move trade safely. _SUCCESS markers are also skipped:
+    # nothing in the engine or its readers consumes them; each is one
+    # extra create+close per write job.
+    builder = builder.config(
+        "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2"
+    ).config(
+        "spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs",
+        "false",
+    )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    if raw_local_fs:
-        try:
-            jvm = spark._jvm
-            fs = jvm.org.apache.hadoop.fs.FileSystem.get(
-                jvm.java.net.URI.create("file:///"),
-                spark._jsc.hadoopConfiguration(),
-            )
-            # The Hadoop FileSystem CACHE returns this same
-            # LocalFileSystem instance to every later caller in the
-            # JVM (local mode: driver and executors share it), so
-            # flipping the flags here drops the shadow-.crc write on
-            # every create and the read-side verification pass, while
-            # the class itself stays LocalFileSystem for the
-            # getLocal() hard-cast paths. Idempotent across repeated
-            # get_spark() calls on a live session.
-            fs.setWriteChecksum(False)
-            fs.setVerifyChecksum(False)
-        except Exception:
-            # Spark Connect: no _jvm — the local-FS floor trim simply
-            # does not apply there.
-            pass
+    try:
+        jvm = spark._jvm
+        fs = jvm.org.apache.hadoop.fs.FileSystem.get(
+            jvm.java.net.URI.create("file:///"),
+            spark._jsc.hadoopConfiguration(),
+        )
+        # The Hadoop FileSystem CACHE returns this same
+        # LocalFileSystem instance to every later caller in the
+        # JVM (local mode: driver and executors share it), so
+        # flipping the flags here drops the shadow-.crc write on
+        # every create and the read-side verification pass, while
+        # the class itself stays LocalFileSystem for the
+        # getLocal() hard-cast paths. Idempotent across repeated
+        # get_spark() calls on a live session.
+        fs.setWriteChecksum(False)
+        fs.setVerifyChecksum(False)
+    except Exception:
+        # Spark Connect: no _jvm — the local-FS floor trim simply
+        # does not apply there.
+        pass
     return spark

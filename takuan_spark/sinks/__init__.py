@@ -3,5 +3,4 @@
 from takuan_spark.sinks.writers import (  # noqa: F401
     write_csv_report,
     write_events,
-    foreach_batch_events,
 )

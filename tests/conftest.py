@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 import pytest
 
@@ -24,3 +25,10 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def oracle_sf_dir():
     return SF_ORACLE
+
+
+@pytest.fixture(scope="session")
+def config_path():
+    """The committed service config: the reference config.example.yml's
+    ssh and http parsers, the same ssh rules, two http rules."""
+    return str(Path(__file__).resolve().parents[1] / "configs" / "takuan.yml")

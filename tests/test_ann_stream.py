@@ -7,7 +7,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from takuan_spark.streaming.ann_stream import (
+from takuan_zoo.streaming.ann_stream import (
     ivf_index_sink,
     ivf_stream_probe,
     start_ivf_index_stream,
@@ -50,7 +50,7 @@ def _drain(spark, env):
 
 
 def _brute_topk(spark, env, qvec, k):
-    from takuan_spark.operators.similarity import cosine_topk
+    from takuan_zoo.operators.similarity import cosine_topk
 
     corpus = spark.read.parquet(str(env["src"]))
     return [
@@ -119,7 +119,7 @@ def test_replayed_epoch_overwrites_not_duplicates(spark, env):
 def test_compaction_preserves_probe_results(spark, env):
     import os
 
-    from takuan_spark.streaming.ann_stream import compact_ivf_epochs
+    from takuan_zoo.streaming.ann_stream import compact_ivf_epochs
 
     rng = np.random.default_rng(11)
     sink = ivf_index_sink(env["index"], dim=DIM, nlist=4)

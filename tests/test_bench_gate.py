@@ -1,4 +1,4 @@
-"""Unit tests for bench.py's spread gate and the scratch sweep —
+"""Unit tests for takuan_zoo.bench's spread gate and the scratch sweep —
 the round-11 hardening against streaming fat-tails: round 10's host
 bounced across passes and median-of-3 committed a 32.31 s median for
 q_stream_checkpoint_restart off runs [70.8, 6.6, 32.3] on an unchanged
@@ -10,15 +10,12 @@ from __future__ import annotations
 
 import os
 import shutil
-import sys
 import tempfile
 import time
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from bench import SPREAD_MAX, _median, _unsettled  # noqa: E402
+from takuan_zoo.bench import SPREAD_MAX, _median, _unsettled
 
 
 def test_r10_fat_tail_is_flagged():
@@ -59,7 +56,7 @@ def test_tight_spread_is_settled():
 
 
 def test_clean_scratch_removes_fixture_trees_keeps_probe_corpus():
-    from takuan_spark.scratch import (
+    from takuan_zoo.scratch import (
         SCRATCH_PREFIXES,
         clean_scratch,
         scratch_path,
@@ -89,7 +86,7 @@ def test_clean_scratch_spares_other_sessions_live_trees():
     """The concurrency guard: a tree this process does NOT own (another
     session's fixtures, simulated by building the path directly) is
     spared while recently active, and swept once idle past min_age."""
-    from takuan_spark.scratch import SCRATCH_PREFIXES, clean_scratch
+    from takuan_zoo.scratch import SCRATCH_PREFIXES, clean_scratch
 
     tmp = tempfile.gettempdir()
     d = os.path.join(tmp, f"{SCRATCH_PREFIXES[0]}foreign456")
@@ -129,7 +126,7 @@ def test_clean_scratch_spares_other_sessions_live_trees():
 
 
 def test_scratch_path_rejects_unregistered_prefix():
-    from takuan_spark.scratch import scratch_path
+    from takuan_zoo.scratch import scratch_path
 
     with pytest.raises(ValueError, match="registered prefix"):
         scratch_path("takuan_unknown_family_x")

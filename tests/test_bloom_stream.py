@@ -8,8 +8,8 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from takuan_spark.operators.bloom import bloom_build, bloom_prefilter
-from takuan_spark.streaming.bloom_stream import (
+from takuan_zoo.operators.bloom import bloom_build, bloom_prefilter
+from takuan_zoo.streaming.bloom_stream import (
     bloom_bucket_sink,
     merged_bloom,
     start_bloom_stream,

@@ -9,7 +9,7 @@ from datetime import datetime, timedelta
 import pytest
 from pyspark.sql import functions as F
 
-from takuan_spark.operators import cdc
+from takuan_zoo.operators import cdc
 
 
 def _ts(s: int):

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from takuan_spark.operators import clustering
+from takuan_zoo.operators import clustering
 
 
 def _emb(spark, vecs):
@@ -90,7 +90,7 @@ def test_seed_centroids_are_lowest_ids_in_order(spark):
 def test_power_iteration_matches_numpy_eigvector(spark):
     import numpy as np
 
-    from takuan_spark.operators.clustering import power_iteration_top_component
+    from takuan_zoo.operators.clustering import power_iteration_top_component
 
     rng = np.random.RandomState(7)
     # anisotropic blob: dominant direction along d0+d1
@@ -115,7 +115,7 @@ def test_power_iteration_matches_numpy_eigvector(spark):
 def test_power_iteration_rejects_zero_iters(spark):
     import pytest
 
-    from takuan_spark.operators.clustering import power_iteration_top_component
+    from takuan_zoo.operators.clustering import power_iteration_top_component
 
     df = spark.createDataFrame([(1, [1.0, 0.0])], ["vec_id", "embedding"])
     with pytest.raises(ValueError):

@@ -5,7 +5,7 @@ hand-checked inputs)."""
 
 from __future__ import annotations
 
-from takuan_spark.operators.curation import (
+from takuan_zoo.operators.curation import (
     contamination_flags,
     pack_sequences,
     repetition_stats,
@@ -75,7 +75,7 @@ def test_pack_sequences_boundaries(spark):
 
 
 def test_redact_pii_patterns(spark):
-    from takuan_spark.operators.text import pii_counts, redact_pii
+    from takuan_zoo.operators.text import pii_counts, redact_pii
 
     rows = [
         ("mail bob.smith+x@corp.example.org now",),
@@ -97,7 +97,7 @@ def test_redact_pii_patterns(spark):
 
 
 def test_sample_to_mix_hits_target_mixture(spark):
-    from takuan_spark.operators.sampling import sample_to_mix
+    from takuan_zoo.operators.sampling import sample_to_mix
 
     rows = (
         [(i, "en") for i in range(100)]
@@ -130,7 +130,7 @@ def test_sample_to_mix_hits_target_mixture(spark):
 
 
 def test_chunk_documents_overlap_and_tail(spark):
-    from takuan_spark.operators.curation import chunk_documents
+    from takuan_zoo.operators.curation import chunk_documents
 
     text = " ".join(f"w{i}" for i in range(10))
     df = spark.createDataFrame([(1, text)], "doc_id long, text string")
@@ -149,7 +149,7 @@ def test_chunk_documents_overlap_and_tail(spark):
 
 
 def test_gopher_rules_each_rule_and_boundaries(spark):
-    from takuan_spark.operators.curation import gopher_rules
+    from takuan_zoo.operators.curation import gopher_rules
 
     long_ok = " ".join(["the", "of"] + ["word"] * 8 + ["vary%d" % i for i in range(42)])
     docs = _docs(
@@ -184,7 +184,7 @@ def test_gopher_rules_each_rule_and_boundaries(spark):
 
 
 def test_gopher_rules_integer_threshold_boundaries(spark):
-    from takuan_spark.operators.curation import gopher_rules
+    from takuan_zoo.operators.curation import gopher_rules
 
     # exact 1/5 top-word mass: 5x'zzzz' (mass 20) + 20x4-char words
     # -> chars_ns 100, 5*20 == 100, <= passes on the boundary
@@ -209,8 +209,8 @@ def test_decontaminate_artifact_matches_direct_build(spark, sf_dir):
     corpus-df, xxhash64 index is the same index the direct path builds."""
     from pyspark.sql import functions as F
 
-    from takuan_spark.operators.curation import contamination_flags_split
-    from takuan_spark.queries import REGISTRY, _load
+    from takuan_zoo.operators.curation import contamination_flags_split
+    from takuan_zoo.queries import REGISTRY, _load
     from takuan_spark.tables import load_table
 
     _load()

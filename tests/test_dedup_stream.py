@@ -6,7 +6,10 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from takuan_spark.streaming.dedup_stream import dedup_batch_sink, start_dedup_stream
+from takuan_zoo.streaming.dedup_stream import (
+    dedup_batch_sink,
+    start_dedup_stream,
+)
 
 
 @pytest.fixture()

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from takuan_spark.operators import graph
+from takuan_zoo.operators import graph
 
 
 def _edges(spark, pairs):
@@ -117,7 +117,7 @@ def test_triangle_stats_huge_ids_no_collision(spark):
 
 
 def test_kcore_peel_strips_tail_keeps_clique(spark):
-    from takuan_spark.operators.graph import kcore_peel
+    from takuan_zoo.operators.graph import kcore_peel
 
     # triangle {1,2,3} with a pendant path 3-4-5: k=2 peeling removes
     # 5 (deg 1) in round 1, then 4 in round 2; the triangle survives
@@ -133,7 +133,7 @@ def test_kcore_peel_strips_tail_keeps_clique(spark):
 
 
 def test_kcore_peel_zero_rounds_is_identity_degrees(spark):
-    from takuan_spark.operators.graph import degrees, kcore_peel
+    from takuan_zoo.operators.graph import degrees, kcore_peel
 
     edges = spark.createDataFrame([(1, 2), (2, 3)], "u int, v int")
     got = {

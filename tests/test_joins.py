@@ -1,8 +1,8 @@
-"""asof_join operator semantics (takuan_spark/operators/joins.py)."""
+"""asof_join operator semantics (takuan_zoo/operators/joins.py)."""
 
 from __future__ import annotations
 
-from takuan_spark.operators.joins import asof_join
+from takuan_zoo.operators.joins import asof_join
 
 
 def _run(spark, left_rows, right_rows, direction="backward"):
@@ -73,7 +73,7 @@ def test_asof_single_shuffle_plan(spark):
 def test_asof_nearest_tie_goes_backward_and_tolerance_drops(spark):
     import datetime as dt
 
-    from takuan_spark.operators.joins import asof_join
+    from takuan_zoo.operators.joins import asof_join
 
     base = dt.datetime(2024, 1, 1, 12, 0, 0)
     left = spark.createDataFrame(
@@ -113,7 +113,7 @@ def test_interval_overlap_counts_bucket_boundaries(spark):
 
     from pyspark.sql import Row
 
-    from takuan_spark.operators.intervals import overlap_counts
+    from takuan_zoo.operators.intervals import overlap_counts
 
     T = lambda h, m=0: dt.datetime(2024, 1, 1, h, m)
     a = spark.createDataFrame(
@@ -153,7 +153,7 @@ def test_interval_overlap_counts_duplicate_keys_canonicalized(spark):
 
     from pyspark.sql import Row
 
-    from takuan_spark.operators.intervals import overlap_counts
+    from takuan_zoo.operators.intervals import overlap_counts
 
     T = lambda h, m=0: dt.datetime(2024, 1, 1, h, m)
     # canonical pick for aid=1 is (10:00, 11:00); the (12:00, 14:00)
@@ -188,7 +188,7 @@ def test_interval_overlap_counts_malformed_intervals(spark):
 
     from pyspark.sql import Row
 
-    from takuan_spark.operators.intervals import overlap_counts
+    from takuan_zoo.operators.intervals import overlap_counts
 
     T = lambda h, m=0: dt.datetime(2024, 1, 1, h, m)
     a = spark.createDataFrame(
@@ -224,7 +224,7 @@ def test_interval_overlap_counts_reserved_columns_raise(spark):
     import pytest
     from pyspark.sql import Row
 
-    from takuan_spark.operators.intervals import overlap_counts
+    from takuan_zoo.operators.intervals import overlap_counts
 
     T = dt.datetime(2024, 1, 1, 10)
     a = spark.createDataFrame([Row(_bk=1, s=T, e=T)])
@@ -314,7 +314,7 @@ def test_interval_overlap_counts_match_bruteforce_random(spark):
         for aid, (s, e) in a_canon.items()
     }
 
-    from takuan_spark.operators.intervals import overlap_counts
+    from takuan_zoo.operators.intervals import overlap_counts
 
     a = spark.createDataFrame([Row(**r) for r in a_rows])
     b = spark.createDataFrame([Row(**r) for r in b_norm])

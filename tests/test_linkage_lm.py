@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from takuan_spark.operators import linkage, lm
+from takuan_zoo.operators import linkage, lm
 
 
 def _docs(spark, rows):

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from takuan_spark.operators.maintenance import (
+from takuan_zoo.operators.maintenance import (
     compaction_bins,
     compaction_plan,
     prune_estimate,
@@ -110,7 +110,7 @@ def test_zonemap_prune_counts(spark):
 
 
 def test_zonemap_query_zorder_beats_natural(spark):
-    from takuan_spark.queries.maintenance import q_zonemap_prune_compare
+    from takuan_zoo.queries.maintenance import q_zonemap_prune_compare
 
     rows = {
         r["layout"]: r
@@ -125,7 +125,7 @@ def test_zonemap_query_zorder_beats_natural(spark):
 
 
 def test_leakage_safe_split_invariants(spark):
-    from takuan_spark.queries.governance import ns_leakage_safe_split
+    from takuan_zoo.queries.governance import ns_leakage_safe_split
 
     rows = ns_leakage_safe_split(spark, "/root/testdata/sf0.001").collect()
     assert {r["split"] for r in rows} <= {"train", "val", "test"}
@@ -135,7 +135,7 @@ def test_leakage_safe_split_invariants(spark):
 
 
 def test_k_anonymity_all_below_threshold(spark):
-    from takuan_spark.queries.governance import ns_k_anonymity
+    from takuan_zoo.queries.governance import ns_k_anonymity
 
     rows = ns_k_anonymity(spark, "/root/testdata/sf0.001").collect()
     assert all(1 <= r["k"] < 5 for r in rows)
@@ -143,7 +143,7 @@ def test_k_anonymity_all_below_threshold(spark):
 
 
 def test_tokenizer_fertility_bounds(spark):
-    from takuan_spark.queries.governance import ns_tokenizer_fertility
+    from takuan_zoo.queries.governance import ns_tokenizer_fertility
 
     rows = ns_tokenizer_fertility(spark, "/root/testdata/sf0.001").collect()
     assert len(rows) >= 1
@@ -157,7 +157,7 @@ def test_tokenizer_fertility_bounds(spark):
 def test_boilerplate_strip_cuts_shared_grams(spark):
     import hashlib
 
-    from takuan_spark.operators.dedup import boilerplate_strip
+    from takuan_zoo.operators.dedup import boilerplate_strip
 
     shared = "alpha beta gamma delta epsilon"  # 5-gram in both docs
     rows = [
@@ -184,7 +184,7 @@ def test_boilerplate_strip_cuts_shared_grams(spark):
 def test_boilerplate_strip_full_removal_yields_empty_hash(spark):
     import hashlib
 
-    from takuan_spark.operators.dedup import boilerplate_strip
+    from takuan_zoo.operators.dedup import boilerplate_strip
 
     t = "one two three four five"
     df = spark.createDataFrame([(1, t), (2, t)], ["doc_id", "text"])
@@ -197,7 +197,7 @@ def test_boilerplate_strip_full_removal_yields_empty_hash(spark):
 def test_audio_segments_match_md5_plan(spark):
     import hashlib
 
-    from takuan_spark.operators.multimodal import (
+    from takuan_zoo.operators.multimodal import (
         audio_segments,
         frame_rms,
         synth_wav,
@@ -238,7 +238,7 @@ def test_audio_segments_match_md5_plan(spark):
 
 
 def test_frame_rms_quarantines_corrupt_payload(spark):
-    from takuan_spark.operators.multimodal import frame_rms, synth_wav
+    from takuan_zoo.operators.multimodal import frame_rms, synth_wav
 
     rows = [(1, bytearray(synth_wav(1))), (2, bytearray(b"not a wav"))]
     media = spark.createDataFrame(rows, ["media_id", "payload"])
@@ -292,7 +292,7 @@ def test_ewma_anomaly_flags_planted_spike(spark):
 
 
 def test_dq_audit_clean_testdata(spark):
-    from takuan_spark.queries.governance import q_dq_audit
+    from takuan_zoo.queries.governance import q_dq_audit
 
     rows = {r["check_name"]: r for r in q_dq_audit(spark, "/root/testdata/sf0.001").collect()}
     assert len(rows) == 5

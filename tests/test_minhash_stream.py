@@ -7,7 +7,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from takuan_spark.streaming.minhash_stream import (
+from takuan_zoo.streaming.minhash_stream import (
     merged_signatures,
     minhash_sink,
     partial_group_signatures,
@@ -100,7 +100,7 @@ def test_hash_once_epoch_folds_equal_reshingled_partials(spark):
     # (what the streaming sink does batch-by-batch).
     from pyspark.sql import functions as F
 
-    from takuan_spark.streaming.minhash_stream import (
+    from takuan_zoo.streaming.minhash_stream import (
         fold_signature_partials,
         shingle_hashes,
     )

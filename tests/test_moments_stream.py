@@ -9,7 +9,7 @@ import math
 import pandas as pd
 import pytest
 
-from takuan_spark.streaming.moments_stream import (
+from takuan_zoo.streaming.moments_stream import (
     merged_moments,
     moments_sink,
     start_moments_stream,

@@ -12,8 +12,12 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from takuan_spark.operators import dedup, multimodal, similarity
 from takuan_spark.tables import load_table
+from takuan_zoo.operators import (
+    dedup,
+    multimodal,
+    similarity,
+)
 
 
 # ------------------------------------------------------------- dedup
@@ -387,7 +391,7 @@ def test_hash_sample_deterministic_and_partition_invariant(spark, sf_dir):
     """Membership must be a pure function of (seed, key): identical
     across repeated runs and across different partitionings, and
     monotone — a row's membership never flips when other rows arrive."""
-    from takuan_spark.operators.sampling import hash_sample
+    from takuan_zoo.operators.sampling import hash_sample
 
     docs = load_table(spark, sf_dir, "documents")
     ids1 = {r["doc_id"] for r in hash_sample(
@@ -408,7 +412,7 @@ def test_hash_sample_deterministic_and_partition_invariant(spark, sf_dir):
 
 
 def test_stratified_sample_rates_respected(spark, sf_dir):
-    from takuan_spark.operators.sampling import stratified_hash_sample
+    from takuan_zoo.operators.sampling import stratified_hash_sample
 
     docs = load_table(spark, sf_dir, "documents")
     out = stratified_hash_sample(
@@ -427,7 +431,7 @@ def test_text_ops_null_empty_unicode(spark):
     """Degenerate documents must not crash or score absurdly: NULL text
     propagates NULL quality, empty/whitespace docs count zero words,
     unicode survives fingerprinting, and pair ops ignore empty docs."""
-    from takuan_spark.operators import text
+    from takuan_zoo.operators import text
 
     rows = [
         (1, None),
@@ -459,7 +463,7 @@ def test_text_ops_null_empty_unicode(spark):
 
 
 def test_winnow_fingerprints_robust_to_local_edits(spark):
-    from takuan_spark.operators.text import winnow_fingerprints
+    from takuan_zoo.operators.text import winnow_fingerprints
 
     base = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
             "lambda mu nu xi omicron pi rho sigma tau upsilon") * 3
@@ -904,7 +908,7 @@ def test_minhash_family_parity_and_bloom_prod(spark, sf_dir):
     }
     assert not (exact - prod), "xxhash64 family missed planted near-dups"
 
-    from takuan_spark.operators import bloom
+    from takuan_zoo.operators import bloom
 
     keys = spark.createDataFrame([(i,) for i in range(0, 50, 5)], "k long")
     fact = spark.createDataFrame([(i,) for i in range(50)], "k long")
@@ -928,7 +932,7 @@ def test_minhash_family_parity_and_bloom_prod(spark, sf_dir):
 
 
 def test_lsh_detect_chain_matches_closed_form(spark):
-    from takuan_spark.queries.northstar import (
+    from takuan_zoo.queries.northstar import (
         _LSH_TUNE_GRID,
         _lsh_detect_col,
         _lsh_detect_sql,

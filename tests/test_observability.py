@@ -23,13 +23,13 @@ BAD = (
 )
 
 
-def _sensor():
-    conf = load_config("/root/reference/config.example.yml", year=YEAR)
+def _sensor(config_path):
+    conf = load_config(config_path, year=YEAR)
     return conf, next(s for s in conf.enabled_sensors() if s.name == "ssh")
 
 
-def test_batch_observation_counts_quarantine(spark, tmp_path):
-    conf, ssh = _sensor()
+def test_batch_observation_counts_quarantine(spark, tmp_path, config_path):
+    conf, ssh = _sensor(config_path)
     log = tmp_path / "auth.log"
     log.write_text(GOOD * 3 + BAD)
     lines = spark.read.text(str(log))
@@ -43,8 +43,8 @@ def test_batch_observation_counts_quarantine(spark, tmp_path):
     assert got["rows_quarantined"] == 1
 
 
-def test_stream_progress_carries_quality_metrics(spark, tmp_path):
-    conf, ssh = _sensor()
+def test_stream_progress_carries_quality_metrics(spark, tmp_path, config_path):
+    conf, ssh = _sensor(config_path)
     src = tmp_path / "ssh"
     src.mkdir()
     (src / "auth.log").write_text(GOOD * 2 + BAD)

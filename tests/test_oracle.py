@@ -14,8 +14,8 @@ import duckdb
 import pandas as pd
 import pytest
 
-from takuan_spark.queries import REGISTRY, _load
 from takuan_spark.tables import TABLE_NAMES
+from takuan_zoo.queries import REGISTRY, _load
 
 _load()
 

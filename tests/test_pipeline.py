@@ -15,10 +15,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from takuan_spark.config import load_config
-from takuan_spark.operators.parse import inject_year, tokenize
-from takuan_spark.operators.rules import apply_rules
-from takuan_spark.operators.reports import address_report, country_topk, unreported
 from takuan_spark.operators.enrich import geo_enrich, re_enrich
+from takuan_spark.operators.parse import inject_year, tokenize
+from takuan_spark.operators.reports import address_report, country_topk, unreported
+from takuan_spark.operators.rules import apply_rules
 from takuan_spark.plans.compiler import compile_batch, compile_sensor
 
 YEAR = 2026
@@ -48,8 +48,8 @@ ACCESS_LINES = [
 
 
 @pytest.fixture(scope="module")
-def conf():
-    return load_config("/root/reference/config.example.yml", year=YEAR)
+def conf(config_path):
+    return load_config(config_path, year=YEAR)
 
 
 @pytest.fixture(scope="module")

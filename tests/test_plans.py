@@ -14,8 +14,8 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from takuan_spark.queries import REGISTRY, _load
 from takuan_spark.tables import load_table
+from takuan_zoo.queries import REGISTRY, _load
 
 _load()
 
@@ -94,13 +94,13 @@ def test_similarity_topk_no_shuffle_before_topk(spark, sf_dir):
     assert "Exchange hashpartitioning" not in plan
 
 
-def test_pipeline_rules_stay_in_one_codegen_stage(spark):
+def test_pipeline_rules_stay_in_one_codegen_stage(spark, config_path):
     """The parse→rules→datetime hot path must be one codegen'd stage:
     no shuffle, no Python, a single WholeStageCodegen span."""
     from takuan_spark.config import load_config
     from takuan_spark.plans.compiler import compile_sensor
 
-    conf = load_config("/root/reference/config.example.yml", year=2026)
+    conf = load_config(config_path, year=2026)
     lines = spark.createDataFrame([("x",)], ["value"])
     plan = plan_of(
         compile_sensor(lines, conf.sensors[0], node_name="n", year=2026)
@@ -114,7 +114,7 @@ def test_ivf_probe_scans_only_probed_partitions(spark, sf_dir, tmp_path):
     partition pruning: the probe's scan lists only nprobe of nlist cell
     directories (checked via inputFiles, which reflects pruning), and
     the plan carries the partition filter."""
-    from takuan_spark.operators import similarity
+    from takuan_zoo.operators import similarity
 
     emb = load_table(spark, sf_dir, "embeddings")
     qvec = [float(x) for x in emb.where(F.col("vec_id") == 0).head()["embedding"]]
@@ -134,7 +134,7 @@ def test_ivf_probe_scans_only_probed_partitions(spark, sf_dir, tmp_path):
 def test_lsh_probe_scans_only_hamming_ball_buckets(spark, sf_dir, tmp_path):
     """The persisted LSH index is partitioned by (tbl, sig); a probe must
     read only the query's Hamming-ball buckets."""
-    from takuan_spark.operators import similarity
+    from takuan_zoo.operators import similarity
 
     emb = load_table(spark, sf_dir, "embeddings")
     qvec = [float(x) for x in emb.where(F.col("vec_id") == 0).head()["embedding"]]
@@ -174,7 +174,7 @@ def test_pq_probe_reads_codes_only(spark, sf_dir, tmp_path):
     """The persisted-PQ probe must never scan raw vectors: its parquet
     scan's ReadSchema carries only (vec_id, codes), and the result
     matches the inline encode-at-query-time pq_topk exactly."""
-    from takuan_spark.operators import similarity
+    from takuan_zoo.operators import similarity
 
     emb = load_table(spark, sf_dir, "embeddings")
     qvec = [float(x) for x in emb.where(F.col("vec_id") == 0).head()["embedding"]]
@@ -197,7 +197,7 @@ def test_ivfpq_probe_prunes_cells_and_reads_codes_only(spark, sf_dir, tmp_path):
     """The composite index must show BOTH levers in one plan: a static
     cell partition filter (nprobe of nlist directories) and a ReadSchema
     without any embedding column."""
-    from takuan_spark.operators import similarity
+    from takuan_zoo.operators import similarity
 
     emb = load_table(spark, sf_dir, "embeddings")
     qvec = [float(x) for x in emb.where(F.col("vec_id") == 0).head()["embedding"]]
@@ -220,7 +220,7 @@ def test_gap_fill_prunes_scan_and_single_window_sort(spark, sf_dir):
     # final plan's text)
     from pyspark.sql import functions as F
 
-    from takuan_spark.operators import timeseries as tsops
+    from takuan_zoo.operators import timeseries as tsops
     from takuan_spark.tables import load_table
 
     series = tsops.bucket_aggregate(
@@ -297,7 +297,7 @@ def test_ivf_probe_runtime_prunes_unprobed_cells(spark, sf_dir, tmp_path):
     control deletion of a probed cell proves the test can fail."""
     import os
 
-    from takuan_spark.operators import similarity
+    from takuan_zoo.operators import similarity
 
     emb = load_table(spark, sf_dir, "embeddings")
     qvec = [float(x) for x in emb.where(F.col("vec_id") == 0).head()["embedding"]]
@@ -328,7 +328,7 @@ def test_lsh_probe_runtime_prunes_outside_ball(spark, sf_dir, tmp_path):
     import os
     import re as _re
 
-    from takuan_spark.operators import similarity
+    from takuan_zoo.operators import similarity
 
     emb = load_table(spark, sf_dir, "embeddings")
     qvec = [float(x) for x in emb.where(F.col("vec_id") == 0).head()["embedding"]]
@@ -368,7 +368,7 @@ def test_lsh_probe_runtime_prunes_outside_ball(spark, sf_dir, tmp_path):
 def test_ivfpq_probe_runtime_prunes_unprobed_cells(spark, sf_dir, tmp_path):
     import os
 
-    from takuan_spark.operators import similarity
+    from takuan_zoo.operators import similarity
 
     emb = load_table(spark, sf_dir, "embeddings")
     qvec = [float(x) for x in emb.where(F.col("vec_id") == 0).head()["embedding"]]
@@ -551,12 +551,29 @@ def test_bloom_prod_membership_before_exchange(spark, sf_dir):
     assert "xxhash64" in plan  # production family, not md5
 
 
-def test_stream_report_fold_reads_partials_not_events(spark, sf_dir):
-    # the fold reads the epoch-partitioned partial table; its plan must
-    # scan parquet partials and aggregate — never re-scan the events
-    # table
-    df = REGISTRY["q_stream_report_fold"].builder(spark, sf_dir)
-    plan = plan_of(df)
+def test_stream_report_fold_reads_partials_not_events(spark, sf_dir, tmp_path):
+    # four deterministic epochs of the events table through report_sink;
+    # the fold reads the epoch-partitioned partial table, so its plan
+    # must scan parquet partials and aggregate — never re-scan the
+    # events table
+    from takuan_spark.streaming.report_stream import merged_report, report_sink
+
+    table = str(tmp_path / "report")
+    ev = load_table(spark, sf_dir, "events")
+    sink = report_sink(table)
+    for e in range(4):
+        batch = ev.where(F.pmod(F.col("event_id"), F.lit(4)) == e)
+        sink(
+            batch.select(
+                F.col("user_id").alias("address"),
+                F.lit("ev").alias("sensor"),
+                F.col("event_type").alias("rule"),
+                F.lit(None).cast("string").alias("country_code"),
+                F.lit(None).cast("string").alias("country_name"),
+            ),
+            e,
+        )
+    plan = plan_of(merged_report(spark, table))
     assert "events.parquet" not in plan
     assert "partial_sum" in plan
 
@@ -678,7 +695,7 @@ def test_token_dropout_no_wide_shuffle(spark, sf_dir):
 
 
 def test_gopher_rules_flags_have_no_shuffle(spark, sf_dir):
-    from takuan_spark.operators.curation import gopher_rules
+    from takuan_zoo.operators.curation import gopher_rules
 
     docs = load_table(spark, sf_dir, "documents")
     plan = plan_of(gopher_rules(docs, stopwords=["the", "a"]))
@@ -711,7 +728,7 @@ def test_pack_efficiency_single_combiner_exchange(spark, sf_dir):
 
 
 def test_link_prediction_wedge_join_not_cartesian(spark, sf_dir):
-    from takuan_spark.operators import graph
+    from takuan_zoo.operators import graph
 
     li = load_table(spark, sf_dir, "lineitem")
     edges = graph.cooccurrence_edges(
@@ -727,10 +744,7 @@ def test_link_prediction_wedge_join_not_cartesian(spark, sf_dir):
 
 
 def test_moments_fold_reader_is_one_aggregation(spark, sf_dir, tmp_path):
-    from takuan_spark.streaming.moments_stream import (
-        merged_moments,
-        moments_sink,
-    )
+    from takuan_zoo.streaming.moments_stream import merged_moments, moments_sink
 
     orders = load_table(spark, sf_dir, "orders")
     table = str(tmp_path / "moments")
@@ -794,7 +808,7 @@ def test_recursive_cte_joins_materialized_edges(spark, sf_dir):
     """q_recursive_cte: the recursion must consume the MATERIALIZED
     edge set (InMemoryTableScan), not re-derive the 4-way fact join
     per level — the re-evaluation trap documented in PLANS.md."""
-    from takuan_spark.operators.skew import release_materialized
+    from takuan_zoo.operators.skew import release_materialized
 
     df = REGISTRY["q_recursive_cte"].builder(spark, sf_dir)
     try:

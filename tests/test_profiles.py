@@ -7,7 +7,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from takuan_spark.streaming.profiles import address_profiles
+from takuan_zoo.streaming.profiles import address_profiles
 
 try:  # transformWithState's control channel needs a working protobuf
     from google.protobuf import descriptor  # noqa: F401
@@ -175,7 +175,7 @@ def _batch(rows):
 
 
 def test_processor_semantics_without_protobuf():
-    from takuan_spark.streaming.profiles import AddressProfileProcessor
+    from takuan_zoo.streaming.profiles import AddressProfileProcessor
 
     proc = AddressProfileProcessor()
     proc.init(_FakeHandle())

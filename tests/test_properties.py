@@ -149,7 +149,7 @@ def test_asof_join_matches_naive(spark, left, right):
     """asof_join (union-tag window) must agree with a naive O(n*m)
     backward lookup for every (key, time) distribution — including
     equal timestamps (at-or-before semantics) and empty right sides."""
-    from takuan_spark.operators.joins import asof_join
+    from takuan_zoo.operators.joins import asof_join
 
     # deduplicate right on (k, t): multiple identical keys at one time
     # have no defined winner in the naive model (engine picks max
@@ -203,7 +203,7 @@ def test_md5_hash_family_matches_python(spark, strings):
 
     from pyspark.sql import functions as F
 
-    from takuan_spark.operators.hashing import (
+    from takuan_zoo.operators.hashing import (
         MERSENNE31,
         affine,
         affine_params,
@@ -232,7 +232,7 @@ def test_md5_hash_family_matches_python(spark, strings):
 
 
 def test_affine_params_deterministic_and_in_range():
-    from takuan_spark.operators.hashing import MERSENNE31, affine_params
+    from takuan_zoo.operators.hashing import MERSENNE31, affine_params
 
     p1, p2 = affine_params(64), affine_params(64)
     assert p1 == p2  # pure function of (seed, i)
@@ -264,7 +264,7 @@ def test_gap_fill_spine_density_and_locf(spark, points):
     (the spine starts at the first observation)."""
     import datetime as dt
 
-    from takuan_spark.operators.timeseries import gap_fill
+    from takuan_zoo.operators.timeseries import gap_fill
 
     base = dt.datetime(2024, 1, 1)
     rows = [
@@ -302,7 +302,7 @@ def test_gap_fill_spine_density_and_locf(spark, points):
 def test_kmv_exact_when_under_k_any_partitioning(spark, toks, n_parts):
     """With fewer distinct values than k the sketch IS the distinct
     count, under any partitioning of the input."""
-    from takuan_spark.operators.sketches import kmv_distinct
+    from takuan_zoo.operators.sketches import kmv_distinct
 
     df = spark.createDataFrame(
         [("s", t) for t in toks], "source string, tok string"
@@ -379,7 +379,7 @@ def _gen_span_cases(n_cases: int = 20) -> list[list[list[str]]]:
 def test_duplicated_spans_matches_reference(spark):
     from pyspark.sql import Row
 
-    from takuan_spark.operators.dedup import duplicated_spans
+    from takuan_zoo.operators.dedup import duplicated_spans
 
     n = 3
     for docs_tokens in _gen_span_cases():
@@ -437,7 +437,7 @@ def _hll_reference(values) -> tuple[float, int]:
 )
 @settings(max_examples=8, deadline=None)
 def test_hll_matches_python_reference_any_partitioning(spark, toks, n_parts):
-    from takuan_spark.operators.sketches import hll_distinct
+    from takuan_zoo.operators.sketches import hll_distinct
 
     df = spark.createDataFrame(
         [("s", t) for t in toks], "source string, tok string"
@@ -458,10 +458,7 @@ def test_hll_matches_python_reference_any_partitioning(spark, toks, n_parts):
 def test_histogram_quantile_within_one_bin_of_truth(spark, vals):
     """The interpolated estimate can never be farther from the true
     quantile than one bin width (both live in the covering bin)."""
-    from takuan_spark.operators.sketches import (
-        histogram_quantiles,
-        histogram_sketch,
-    )
+    from takuan_zoo.operators.sketches import histogram_quantiles, histogram_sketch
 
     df = spark.createDataFrame([(v,) for v in vals], "v double").withColumn(
         "g", F.lit("a")
@@ -504,7 +501,7 @@ def test_containment_of_embedded_doc_is_one(spark, inner, framing):
     """Whenever doc A's word sequence appears verbatim inside doc B,
     containment(A -> B) must be exactly 1.0 (every shingle of A is a
     shingle of B) — the property Jaccard does not have."""
-    from takuan_spark.operators.dedup import containment_pairs
+    from takuan_zoo.operators.dedup import containment_pairs
 
     a_text = " ".join(inner)
     b_text = " ".join(framing + inner + framing)
@@ -531,7 +528,7 @@ def test_jaccard_threshold_bin_equals_direct_filter(spark, vals):
     double comparison exactly: for every threshold k/10, rows with
     bin >= k are EXACTLY the rows with value >= k/10.0 (the property
     floor(v*10) violates at boundary doubles like 0.3)."""
-    from takuan_spark.operators.dedup import jaccard_threshold_bin
+    from takuan_zoo.operators.dedup import jaccard_threshold_bin
 
     df = spark.createDataFrame([(float(v),) for v in vals], "jaccard double")
     got = [
@@ -562,7 +559,7 @@ def test_ks_drift_matches_naive_ecdf(spark, data):
     """ks_drift must equal the textbook two-sample statistic computed
     by a naive per-group ECDF sweep in pure Python (group vs pooled),
     to the 6dp rounding the operator promises."""
-    from takuan_spark.operators.corpus_stats import ks_drift
+    from takuan_zoo.operators.corpus_stats import ks_drift
 
     from pyspark.sql import Row
 
@@ -599,7 +596,7 @@ def test_ks_drift_matches_naive_ecdf(spark, data):
 def test_kcore_peel_matches_reference_peeling(spark, edges, k):
     """kcore_peel must equal an independent Python peeling of the same
     number of rounds on random small graphs."""
-    from takuan_spark.operators.graph import kcore_peel
+    from takuan_zoo.operators.graph import kcore_peel
 
     rounds = 3
     es = set(edges)
@@ -638,7 +635,7 @@ def test_host_suffixes_matches_python_split(spark, host):
     any label sequence."""
     from pyspark.sql import Row
 
-    from takuan_spark.operators.web import host_suffixes
+    from takuan_zoo.operators.web import host_suffixes
 
     h = ".".join(host)
     want = [".".join(host[i:]) for i in range(len(host))]
@@ -663,7 +660,7 @@ def test_cms_estimate_upper_bounds_truth(spark, counts):
     """CMS point estimates are upper bounds of true frequencies (the
     sketch over-counts only on collisions, never under-counts) for any
     multiset — invariant under the r6 lane-hash family."""
-    from takuan_spark.operators import sketches
+    from takuan_zoo.operators import sketches
 
     rows = [(t,) for t, c in counts for _ in range(c)]
     df = spark.createDataFrame(rows, "tok string").withColumn(

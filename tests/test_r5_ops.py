@@ -8,10 +8,10 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from takuan_spark.operators import corpus_stats, timeseries as tsops
-from takuan_spark.operators.clustering import matryoshka_energy
-from takuan_spark.operators.dedup import dedup_representatives
-from takuan_spark.operators.similarity import auto_nbits
+from takuan_zoo.operators import corpus_stats, timeseries as tsops
+from takuan_zoo.operators.clustering import matryoshka_energy
+from takuan_zoo.operators.dedup import dedup_representatives
+from takuan_zoo.operators.similarity import auto_nbits
 
 
 def _docs(spark, rows):
@@ -152,7 +152,7 @@ def test_kcenter_coreset_farthest_point_order(spark):
         [(i, [x, 0.0, 0.0, 0.0], 0) for i, x in pts.items()],
         "vec_id long, embedding array<float>, label int",
     )
-    from takuan_spark.operators.clustering import kcenter_coreset
+    from takuan_zoo.operators.clustering import kcenter_coreset
 
     got = [
         (r["rank"], r["vec_id"], r["mind"])
@@ -169,7 +169,7 @@ def test_local_clustering_known_graph(spark):
     # triangle 1-2-3 plus a pendant 4 hanging off 3:
     # lcc(1) = lcc(2) = 1 (deg 2, 1 triangle); lcc(3) = 1/3 (deg 3);
     # lcc(4) = 0 (deg 1)
-    from takuan_spark.operators.graph import local_clustering
+    from takuan_zoo.operators.graph import local_clustering
 
     edges = spark.createDataFrame(
         [(1, 2), (1, 3), (2, 3), (3, 4)], "u long, v long"
@@ -196,7 +196,7 @@ def test_interarrival_stats_exact_moments(spark):
     ev = spark.createDataFrame(
         rows, "event_id long, ts string, user_id long, value double"
     ).withColumn("ts", F.to_timestamp("ts"))
-    from takuan_spark.queries import REGISTRY, _load
+    from takuan_zoo.queries import REGISTRY, _load
 
     _load()
     import tempfile, os

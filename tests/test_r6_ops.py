@@ -9,8 +9,14 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from takuan_spark.operators import clustering, corpus_stats, curation, dedup, graph
-from takuan_spark.operators import multimodal as mm
+from takuan_zoo.operators import (
+    clustering,
+    corpus_stats,
+    curation,
+    dedup,
+    graph,
+)
+from takuan_zoo.operators import multimodal as mm
 
 
 def _docs(spark, rows):
@@ -279,7 +285,7 @@ def test_token_burstiness_min_df_filter(spark):
 
 
 def test_prefix_templates_digit_normalization(spark):
-    from takuan_spark.operators.text import prefix_templates
+    from takuan_zoo.operators.text import prefix_templates
 
     docs = _docs(
         spark,
@@ -300,7 +306,7 @@ def test_prefix_templates_digit_normalization(spark):
 
 
 def test_quantile_normalize_identity_on_single_group(spark):
-    from takuan_spark.operators.binning import quantile_normalize
+    from takuan_zoo.operators.binning import quantile_normalize
 
     df = spark.createDataFrame(
         [Row(doc_id=i, source="s", n_chars=v) for i, v in enumerate([10, 20, 30, 40])]
@@ -313,7 +319,7 @@ def test_quantile_normalize_identity_on_single_group(spark):
 
 
 def test_quantile_normalize_maps_hot_source_onto_pool(spark):
-    from takuan_spark.operators.binning import quantile_normalize
+    from takuan_zoo.operators.binning import quantile_normalize
 
     # source "hot" has values 100,200; source "cold" 1,2.
     # pooled sorted: [1, 2, 100, 200] (N=4).
@@ -337,7 +343,7 @@ def test_quantile_normalize_maps_hot_source_onto_pool(spark):
 
 
 def test_quantile_normalize_singleton_group_gets_median(spark):
-    from takuan_spark.operators.binning import quantile_normalize
+    from takuan_zoo.operators.binning import quantile_normalize
 
     # pool: [5, 7, 9] (N=3); singleton group -> idx (3+1)//2 = 2 -> 7
     df = spark.createDataFrame(
@@ -360,7 +366,7 @@ def test_quantile_normalize_singleton_group_gets_median(spark):
 
 
 def test_jaccard_threshold_bin_boundary_doubles(spark):
-    from takuan_spark.operators.dedup import jaccard_threshold_bin
+    from takuan_zoo.operators.dedup import jaccard_threshold_bin
 
     # 0.3 as a double sits BELOW 3.0 after *10 (floor would misbin),
     # but >= 3/10.0 must hold; 0.79999 clears 0.7 not 0.8; 0.9 -> 9.
@@ -381,7 +387,7 @@ def test_jaccard_threshold_bin_boundary_doubles(spark):
 
 
 def test_deletion_cascade_shared_fingerprint_survives(spark):
-    from takuan_spark.operators.maintenance import deletion_cascade
+    from takuan_zoo.operators.maintenance import deletion_cascade
 
     # doc 0 (deleted) shares text with doc 1 (retained): the shared
     # fingerprint must SURVIVE; doc 2's unique fp (deleted) must go.
@@ -408,7 +414,7 @@ def test_deletion_cascade_shared_fingerprint_survives(spark):
 
 
 def test_deletion_cascade_no_deletes_is_identity(spark):
-    from takuan_spark.operators.maintenance import deletion_cascade
+    from takuan_zoo.operators.maintenance import deletion_cascade
 
     docs = _docs(spark, [("a b", "en", "s"), ("c d", "en", "s")])
     out = deletion_cascade(docs, F.lit(False)).collect()
@@ -420,7 +426,7 @@ def test_deletion_cascade_no_deletes_is_identity(spark):
 
 
 def test_manifest_hash_order_insensitive(spark):
-    from takuan_spark.operators.corpus_stats import manifest_hash
+    from takuan_zoo.operators.corpus_stats import manifest_hash
 
     rows = [("b text", "s"), ("a text", "s"), ("c text", "s")]
     d1 = _docs(spark, [(t, "en", s) for t, s in rows])
@@ -431,7 +437,7 @@ def test_manifest_hash_order_insensitive(spark):
 
 
 def test_manifest_hash_detects_single_char_change(spark):
-    from takuan_spark.operators.corpus_stats import manifest_hash
+    from takuan_zoo.operators.corpus_stats import manifest_hash
 
     d1 = _docs(spark, [("hello world", "en", "s")])
     d2 = _docs(spark, [("hello worle", "en", "s")])
@@ -443,7 +449,7 @@ def test_manifest_hash_detects_single_char_change(spark):
 def test_token_dropout_mask_matches_spec(spark):
     import hashlib
 
-    from takuan_spark.operators.text import token_dropout
+    from takuan_zoo.operators.text import token_dropout
 
     text = " ".join(f"w{i}" for i in range(40))
     docs = _docs(spark, [(text, "en", "s")])
@@ -488,7 +494,7 @@ def test_filter_funnel_null_predicate_fails_stage(spark):
 
 
 def test_dedup_representatives_string_ids(spark):
-    from takuan_spark.operators.dedup import dedup_representatives
+    from takuan_zoo.operators.dedup import dedup_representatives
 
     df = spark.createDataFrame(
         [
@@ -545,7 +551,7 @@ def test_int8_quant_error_submax_calibration_clips(spark):
 
 
 def test_source_share_matrix_counts_and_cap(spark):
-    from takuan_spark.operators.dedup import source_share_matrix
+    from takuan_zoo.operators.dedup import source_share_matrix
 
     docs = spark.createDataFrame(
         [
@@ -573,7 +579,7 @@ def test_source_share_matrix_counts_and_cap(spark):
 
 
 def test_dp_histogram_suppresses_and_is_reproducible(spark):
-    from takuan_spark.operators.corpus_stats import dp_histogram
+    from takuan_zoo.operators.corpus_stats import dp_histogram
 
     rows = [("en", 0)] * 7 + [("de", 1)] * 3  # de group under k_min=5
     df = spark.createDataFrame(rows, "lang string, lbucket int")
@@ -592,7 +598,7 @@ def test_dp_histogram_release_mode_drops_true_count(spark):
     # release=True is the actually-publishable projection: the exact
     # count never leaves the pipeline (the audit shape keeps it only
     # for the oracle/driver hash check).
-    from takuan_spark.operators.corpus_stats import dp_histogram
+    from takuan_zoo.operators.corpus_stats import dp_histogram
 
     df = spark.createDataFrame(
         [("en", 0)] * 7, "lang string, lbucket int"
@@ -613,7 +619,7 @@ def test_global_ntile_matches_single_sort_ntile(spark):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from takuan_spark.operators.binning import global_ntile
+    from takuan_zoo.operators.binning import global_ntile
 
     rng = random.Random(7)
     rows = [(rng.choice([1.0, 2.0, 5.0]), i) for i in range(97)]
@@ -647,7 +653,7 @@ def test_global_ntile_plan_has_no_single_partition_window(spark):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from takuan_spark.operators.binning import global_ntile
+    from takuan_zoo.operators.binning import global_ntile
 
     def data_windows(frame, order_col_marker):
         plan = frame._jdf.queryExecution().executedPlan().toString()

@@ -10,8 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from takuan_spark.queries import REGISTRY, _load
 from takuan_spark.tables import load_table
+from takuan_zoo.queries import REGISTRY, _load
 
 _load()
 
@@ -45,7 +45,7 @@ def test_mv_incremental_both_sides_populated(spark, sf_dir):
     # the split date must actually cut the data in two, or the
     # "incremental" path degenerates to a full recompute
     orders = load_table(spark, sf_dir, "orders")
-    from takuan_spark.queries.maintenance import _MV_SPLIT
+    from takuan_zoo.queries.maintenance import _MV_SPLIT
 
     n_old = orders.where(F.col("o_orderdate") < _MV_SPLIT).count()
     n_new = orders.where(F.col("o_orderdate") >= _MV_SPLIT).count()

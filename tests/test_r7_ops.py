@@ -8,7 +8,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from takuan_spark.operators import similarity
+from takuan_zoo.operators import similarity
 
 
 def _vecs(n: int, dim: int = 8) -> list[list[float]]:
@@ -133,7 +133,7 @@ def test_bitext_cell_cap_keeps_lowest_ids(spark):
 
 
 def test_native_sketch_parity_flags_true(spark, sf_dir):
-    from takuan_spark.queries import REGISTRY, _load
+    from takuan_zoo.queries import REGISTRY, _load
 
     _load()
     rows = REGISTRY["q_native_sketch_parity"].builder(spark, sf_dir).collect()

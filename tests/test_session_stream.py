@@ -10,7 +10,7 @@ import datetime as dt
 import pandas as pd
 import pytest
 
-from takuan_spark.streaming.session_stream import (
+from takuan_zoo.streaming.session_stream import (
     merged_sessions,
     partial_sessions,
     session_sink,

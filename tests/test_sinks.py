@@ -1,5 +1,7 @@
-"""Sink semantics: date-partitioned events, single-file CSV reports,
-deterministic training shards (takuan_spark/sinks/writers.py)."""
+"""Sink semantics: date-partitioned events and single-file CSV reports
+(takuan_spark/sinks/writers.py); the zoo's training shards, clustered
+and z-ordered layouts, ORC and write-audit-publish
+(takuan_zoo/sinks/writers.py)."""
 
 from __future__ import annotations
 
@@ -7,12 +9,9 @@ import os
 
 from pyspark.sql import functions as F
 
-from takuan_spark.sinks.writers import (
-    write_csv_report,
-    write_events,
-    write_training_shards,
-)
+from takuan_spark.sinks.writers import write_csv_report, write_events
 from takuan_spark.tables import load_table
+from takuan_zoo.sinks.writers import write_training_shards
 
 
 def test_write_events_partitions_by_date(spark, tmp_path):
@@ -67,7 +66,7 @@ def test_write_clustered_ranges_are_disjoint(spark, sf_dir, tmp_path):
     pruning needs."""
     import pyarrow.parquet as pq
 
-    from takuan_spark.sinks.writers import write_clustered
+    from takuan_zoo.sinks.writers import write_clustered
 
     docs = load_table(spark, sf_dir, "documents")
     out = str(tmp_path / "clustered")
@@ -88,8 +87,8 @@ def test_write_clustered_ranges_are_disjoint(spark, sf_dir, tmp_path):
 
 
 def test_orc_round_trip_with_partition_pruning(spark, tmp_path):
-    from takuan_spark.sinks.writers import write_events_orc
-    from takuan_spark.sources.readers import read_orc
+    from takuan_zoo.sinks.writers import write_events_orc
+    from takuan_zoo.sources.readers import read_orc
 
     df = spark.createDataFrame(
         [
@@ -112,7 +111,7 @@ def test_orc_round_trip_with_partition_pruning(spark, tmp_path):
 def test_read_avro_raises_clear_error_without_package(spark, tmp_path):
     import pytest as _pytest
 
-    from takuan_spark.sources.readers import read_avro
+    from takuan_zoo.sources.readers import read_avro
 
     with _pytest.raises(RuntimeError, match="spark-avro"):
         read_avro(spark, str(tmp_path / "nope.avro"))
@@ -124,7 +123,7 @@ def test_write_zordered_tightens_rowgroup_stats(spark, tmp_path):
     min/max-pruning property, checked on the actual file footers."""
     import pyarrow.parquet as pq
 
-    from takuan_spark.sinks.writers import write_zordered
+    from takuan_zoo.sinks.writers import write_zordered
 
     rows = [(i * 37 % 256, i * 91 % 256) for i in range(20000)]
     df = spark.createDataFrame(rows, "a long, b long").repartition(8)
@@ -166,7 +165,7 @@ def test_write_zordered_tightens_rowgroup_stats(spark, tmp_path):
 def test_wap_publish_gates_and_swaps(spark, tmp_path):
     import pytest as _pytest
 
-    from takuan_spark.sinks.writers import (
+    from takuan_zoo.sinks.writers import (
         AuditFailure,
         min_rows,
         no_nulls,
@@ -195,7 +194,7 @@ def test_wap_publish_gates_and_swaps(spark, tmp_path):
 
 
 def test_orc_partition_prune_reads_only_matching_partitions(spark, sf_dir):
-    from takuan_spark.queries.ingest import q_orc_partition_prune
+    from takuan_zoo.queries.ingest import q_orc_partition_prune
 
     df = q_orc_partition_prune(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()

@@ -6,8 +6,8 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from takuan_spark.operators.sketches import kmv_distinct
-from takuan_spark.streaming.sketch_stream import (
+from takuan_zoo.operators.sketches import kmv_distinct
+from takuan_zoo.streaming.sketch_stream import (
     kmv_sketch_sink,
     kmv_stream_estimate,
     start_kmv_sketch_stream,
@@ -86,8 +86,8 @@ def test_replayed_epoch_does_not_move_the_estimate(spark, env):
 
 
 def test_cms_stream_estimate_equals_batch_grid(spark, env):
-    from takuan_spark.operators.sketches import cms_counters, cms_estimate
-    from takuan_spark.streaming.sketch_stream import (
+    from takuan_zoo.operators.sketches import cms_counters, cms_estimate
+    from takuan_zoo.streaming.sketch_stream import (
         cms_stream_estimate,
         start_cms_sketch_stream,
     )
@@ -132,7 +132,7 @@ def test_cms_stream_estimate_equals_batch_grid(spark, env):
 
 
 def test_compaction_folds_epochs_without_changing_estimates(spark, env):
-    from takuan_spark.streaming.sketch_stream import (
+    from takuan_zoo.streaming.sketch_stream import (
         compact_kmv_epochs,
         kmv_sketch_sink,
     )
@@ -164,8 +164,8 @@ def test_compaction_spares_uncommitted_epoch_from_double_count(spark, env, tmp_p
     the batch in the CMS sums."""
     import os
 
-    from takuan_spark.operators.sketches import cms_counters, cms_estimate
-    from takuan_spark.streaming.sketch_stream import (
+    from takuan_zoo.operators.sketches import cms_counters, cms_estimate
+    from takuan_zoo.streaming.sketch_stream import (
         cms_sketch_sink,
         cms_stream_estimate,
         compact_cms_epochs,
@@ -203,8 +203,8 @@ def test_compaction_spares_uncommitted_epoch_from_double_count(spark, env, tmp_p
 
 
 def test_hll_stream_estimate_equals_batch_sketch(spark, env):
-    from takuan_spark.operators.sketches import hll_distinct
-    from takuan_spark.streaming.sketch_stream import (
+    from takuan_zoo.operators.sketches import hll_distinct
+    from takuan_zoo.streaming.sketch_stream import (
         hll_stream_estimate,
         start_hll_sketch_stream,
     )
@@ -240,11 +240,8 @@ def test_hll_stream_estimate_equals_batch_sketch(spark, env):
 def test_hist_stream_quantiles_equal_batch_and_compact(spark, env, tmp_path):
     import pandas as pd
 
-    from takuan_spark.operators.sketches import (
-        histogram_quantiles,
-        histogram_sketch,
-    )
-    from takuan_spark.streaming.sketch_stream import (
+    from takuan_zoo.operators.sketches import histogram_quantiles, histogram_sketch
+    from takuan_zoo.streaming.sketch_stream import (
         compact_hist_epochs,
         hist_stream_quantiles,
         start_hist_sketch_stream,
@@ -301,7 +298,7 @@ def test_compaction_refuses_unreadable_checkpoint(spark, tmp_path):
     epochs (which would double-count them on resume)."""
     import pytest as _pytest
 
-    from takuan_spark.streaming.sketch_stream import compact_cms_epochs
+    from takuan_zoo.streaming.sketch_stream import compact_cms_epochs
 
     table = str(tmp_path / "grids")
     spark.createDataFrame(

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from takuan_spark.operators import sketches
+from takuan_zoo.operators import sketches
 
 
 def _toks(spark, n_parts):
@@ -272,7 +272,7 @@ def test_sliding_hll_merges_daily_registers(spark):
     # sketch of the union of those days' rows.
     from datetime import date
 
-    from takuan_spark.operators import sketches
+    from takuan_zoo.operators import sketches
 
     rows = []
     for d, users in ((1, range(0, 30)), (2, range(20, 60)), (3, range(50, 55))):

@@ -1,11 +1,12 @@
-"""Salting utilities must be semantics-preserving: salted plans equal
-their unsalted counterparts on skewed data."""
+"""Skew helpers: ``spread`` widens a narrow scan before per-row CPU
+work; the zoo's salting utilities must be semantics-preserving (salted
+plans equal their unsalted counterparts on skewed data)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from takuan_spark.operators.skew import salted_agg, salted_join
+from takuan_zoo.operators.skew import salted_agg, salted_join
 
 
 def _skewed_df(spark):
@@ -77,7 +78,7 @@ def test_spread_noop_on_wide_input(spark):
 def test_materialize_preserves_rows(spark):
     """Default (checkpoint-backed) materialize: rows preserved, plan
     truncated to a flat scan over the materialized RDD."""
-    from takuan_spark.operators.skew import materialize
+    from takuan_zoo.operators.skew import materialize
 
     df = spark.range(100).toDF("id")
     m = materialize(df)
@@ -86,20 +87,8 @@ def test_materialize_preserves_rows(spark):
     assert "ExistingRDD" in plan or "LocalTableScan" in plan
 
 
-def test_materialize_persist_mode_preserves_rows(spark, monkeypatch):
-    """TAKUAN_MATERIALIZE_MODE=persist restores the cached-frame path."""
-    monkeypatch.setenv("TAKUAN_MATERIALIZE_MODE", "persist")
-    from takuan_spark.operators.skew import materialize
-
-    df = spark.range(100).toDF("id")
-    m = materialize(df)
-    assert sorted(r["id"] for r in m.collect()) == list(range(100))
-    assert m.storageLevel.useMemory
-    m.unpersist()
-
-
 def test_key_skew_profile_uniform_vs_hot(spark):
-    from takuan_spark.operators.skew import key_skew_profile
+    from takuan_zoo.operators.skew import key_skew_profile
 
     uniform = spark.createDataFrame(
         [(i % 10,) for i in range(1000)], "k int"
@@ -118,7 +107,7 @@ def test_key_skew_profile_uniform_vs_hot(spark):
 
 
 def test_zorder_key_matches_python_reference(spark):
-    from takuan_spark.operators.layout import zorder_key2
+    from takuan_zoo.operators.layout import zorder_key2
 
     rows = [(a, b) for a in (0, 1, 37, 255) for b in (0, 2, 129, 255)]
     df = spark.createDataFrame(rows, "a long, b long")
@@ -142,7 +131,7 @@ def test_zorder_key_matches_python_reference(spark):
 def test_zorder_ranges_bound_both_dims(spark):
     # every contiguous top-4-bit key range confines both dimensions to
     # a 64-wide band — the row-group pruning property.
-    from takuan_spark.operators.layout import zorder_key2
+    from takuan_zoo.operators.layout import zorder_key2
 
     rows = [(a, b) for a in range(0, 256, 5) for b in range(0, 256, 7)]
     df = spark.createDataFrame(rows, "a long, b long")
@@ -161,7 +150,7 @@ def test_zorder_ranges_bound_both_dims(spark):
 
 
 def test_key_skew_profile_empty_input(spark):
-    from takuan_spark.operators.skew import key_skew_profile
+    from takuan_zoo.operators.skew import key_skew_profile
 
     empty = spark.createDataFrame([], "k int")
     row = key_skew_profile(empty, key_cols=["k"]).collect()[0]
@@ -171,32 +160,39 @@ def test_key_skew_profile_empty_input(spark):
     assert row["norm_entropy"] is None
 
 
-def test_release_materialized_unpersists_tracked_frames(spark, monkeypatch):
-    """Persist-mode frames are tracked and released; checkpoint-mode
-    frames (the default) hold no cache-manager entry to release."""
-    monkeypatch.setenv("TAKUAN_MATERIALIZE_MODE", "persist")
-    from takuan_spark.operators.skew import materialize, release_materialized
+def _tracked_persist(df):
+    """Persist ``df`` and track it the way ``snapshot``'s persist
+    fallback does on sessions without ``localCheckpoint``."""
+    from takuan_zoo.operators import skew
+
+    df = df.persist()
+    skew._MATERIALIZED.append(df)
+    return df
+
+
+def test_release_materialized_unpersists_tracked_frames(spark):
+    """Tracked persisted frames are released; checkpointed frames (the
+    default) hold no cache-manager entry to release."""
+    from takuan_zoo.operators.skew import release_materialized
 
     release_materialized()  # drain anything a prior test left behind
-    df = materialize(spark.range(10))
+    df = _tracked_persist(spark.range(10))
     df.count()
     assert df.storageLevel.useMemory or df.storageLevel.useDisk
     assert release_materialized() >= 1
     assert not (df.storageLevel.useMemory or df.storageLevel.useDisk)
 
 
-def test_registry_builder_releases_previous_query_caches(spark, monkeypatch):
-    """The REGISTRY wrapper must drop the previous query's persist-mode
-    materialize() caches when the next query starts (cache hygiene in
-    sessions the harness doesn't own, e.g. the driver's correctness
-    run)."""
-    monkeypatch.setenv("TAKUAN_MATERIALIZE_MODE", "persist")
-    from takuan_spark.operators.skew import materialize, release_materialized
-    from takuan_spark.queries import REGISTRY, _load
+def test_registry_builder_releases_previous_query_caches(spark):
+    """The zoo's REGISTRY wrapper must drop the previous query's tracked
+    caches when the next query starts (cache hygiene in sessions the
+    harness doesn't own, e.g. pytest's shared session)."""
+    from takuan_zoo.operators.skew import release_materialized
+    from takuan_zoo.queries import REGISTRY, _load
 
     _load()
     release_materialized()
-    leftover = materialize(spark.range(5))
+    leftover = _tracked_persist(spark.range(5))
     leftover.count()
     assert leftover.storageLevel.useMemory or leftover.storageLevel.useDisk
     REGISTRY["q_distinct_count"].builder(spark, "/root/testdata/sf0.001")

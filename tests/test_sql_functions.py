@@ -7,9 +7,10 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from takuan_spark.functions import register_sql_functions
-from takuan_spark.operators import enrich, text, web
-from takuan_spark.operators.hashing import md5_int
+from takuan_spark.operators import enrich
+from takuan_zoo.functions import register_sql_functions
+from takuan_zoo.operators import text, web
+from takuan_zoo.operators.hashing import md5_int
 
 SAMPLES = [
     "The quick brown fox, it jumped! Over 42 lazy dogs...",
@@ -113,7 +114,7 @@ def test_sql_pipe_syntax_matches_classic_form(spark, sf_dir):
     """The pipe-operator form must return the exact rows of the classic
     formulation on the same session (the Catalyst-normalization claim
     q_sql_pipe_syntax registers against the external oracle)."""
-    from takuan_spark.queries.advanced import q_sql_pipe_syntax
+    from takuan_zoo.queries.advanced import q_sql_pipe_syntax
 
     piped = q_sql_pipe_syntax(spark, sf_dir).collect()
     from takuan_spark.tables import load_table

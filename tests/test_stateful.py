@@ -7,8 +7,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from takuan_spark.streaming.stateful import brute_force_alerts
-from takuan_spark.streaming.windows import sessionized_counts, windowed_counts
+from takuan_zoo.streaming.stateful import brute_force_alerts
+from takuan_zoo.streaming.windows import sessionized_counts, windowed_counts
 
 
 def _sf_dirs():
@@ -115,7 +115,7 @@ def test_alert_buffer_update_fn_seals_by_watermark_not_arrival():
     same feed emits a MALFORMED alert (window_start > window_end),
     the non-vacuity of q_stream_bruteforce_unordered's arrival
     protocol."""
-    from takuan_spark.streaming.stateful import (
+    from takuan_zoo.streaming.stateful import (
         make_alert_buffer_update_fn,
         make_update_fn,
     )
@@ -189,7 +189,7 @@ def test_alert_buffer_fold_matches_ordered_on_sorted_feed():
     """Sealing prefix-at-a-time must equal the ordered fold on the
     same sorted sequence — including cooldown re-arm across seal
     boundaries (the doubly-order-dependent part)."""
-    from takuan_spark.streaming.stateful import (
+    from takuan_zoo.streaming.stateful import (
         make_alert_buffer_update_fn,
         make_update_fn,
     )
@@ -390,7 +390,7 @@ class _FakeState:
 
 
 def test_update_fn_evicts_on_timeout_and_bounds_state_by_time():
-    from takuan_spark.streaming.stateful import make_update_fn
+    from takuan_zoo.streaming.stateful import make_update_fn
 
     fn = make_update_fn(
         time_col="created_at",
@@ -431,7 +431,7 @@ def test_update_fn_max_state_events_caps_hot_key_state():
     hard-capped at K (most recent kept), the alert still fires (K >=
     threshold), and n_events saturates at K — the bounded-state guard
     for adversarial floods."""
-    from takuan_spark.streaming.stateful import make_update_fn
+    from takuan_zoo.streaming.stateful import make_update_fn
 
     fn = make_update_fn(
         time_col="created_at",
@@ -461,14 +461,14 @@ def test_update_fn_max_state_events_caps_hot_key_state():
     # a cap below threshold could suppress alerts — constructor refuses
     import pytest as _pytest
 
-    from takuan_spark.streaming.stateful import brute_force_alerts
+    from takuan_zoo.streaming.stateful import brute_force_alerts
 
     with _pytest.raises(ValueError, match="must be >= threshold"):
         brute_force_alerts(None, threshold=5, max_state_events=3)
 
 
 def test_gap_update_fn_carries_state_and_flushes_on_timeout():
-    from takuan_spark.streaming.stateful import make_gap_update_fn
+    from takuan_zoo.streaming.stateful import make_gap_update_fn
 
     flush_ms = 1_000_000_000
     fn = make_gap_update_fn("user_id", flush_ms)
@@ -517,7 +517,7 @@ def test_gap_buffer_update_fn_seals_by_watermark_not_arrival():
     inverted delivery yields the same answer the ordered protocol
     gives — while the ordered fold on the same feed is provably wrong
     (the non-vacuity of q_stream_unordered_state's arrival protocol)."""
-    from takuan_spark.streaming.stateful import (
+    from takuan_zoo.streaming.stateful import (
         make_gap_buffer_update_fn,
         make_gap_update_fn,
     )
@@ -643,10 +643,7 @@ def test_checkpoint_restart_boundary_window_straddles_runs():
 
     import duckdb
 
-    from takuan_spark.queries.stream_analog import (
-        _RESTART_AFTER,
-        _RESTART_EPOCHS,
-    )
+    from takuan_zoo.queries.stream_analog import _RESTART_AFTER, _RESTART_EPOCHS
 
     con = duckdb.connect()
     for sf_dir in _sf_dirs():
@@ -870,7 +867,7 @@ def test_sessionized_counts_streaming(spark, stream_env):
 
 
 def test_deduped_stream_drops_replays_across_batches(spark, stream_env):
-    from takuan_spark.streaming.windows import deduped_stream
+    from takuan_zoo.streaming.windows import deduped_stream
 
     rows = [
         ("1.1.1.1", "2026-08-13 06:00:00", "ssh", "r"),
@@ -900,7 +897,7 @@ def test_deduped_stream_drops_replays_across_batches(spark, stream_env):
 def test_stream_stream_interval_join(spark, stream_env):
     """Errors pick up same-address auth-failures from the preceding
     5 minutes; a failure outside the interval must not match."""
-    from takuan_spark.streaming.windows import interval_join
+    from takuan_zoo.streaming.windows import interval_join
 
     rows = [
         ("9.9.9.9", "2026-08-13 06:00:00", "ssh", "auth-failure"),
@@ -945,7 +942,7 @@ def test_stream_stream_interval_join_full_outer(spark, stream_env):
     sentinel rows on both sides across later micro-batches). Pins the
     join-type flag end-to-end beyond the registered leftOuter row, so
     the full-outer semantics need no bench-time query of their own."""
-    from takuan_spark.streaming.windows import interval_join
+    from takuan_zoo.streaming.windows import interval_join
 
     rows = [
         ("9.9.9.9", "2026-08-13 06:00:00", "ssh", "auth-failure"),
@@ -1012,7 +1009,7 @@ def test_streaming_detector_matches_batch_analog(spark, stream_env):
     (brute_force_alerts_batch) — the equivalence the q_stateful_alerts
     oracle row pins. Event times are second-distinct per address, the
     regime where the two formulations agree exactly."""
-    from takuan_spark.streaming.stateful import brute_force_alerts_batch
+    from takuan_zoo.streaming.stateful import brute_force_alerts_batch
 
     rows = []
     # bursty attacker: 8 events 7s apart (alerts from the 3rd on),
@@ -1337,7 +1334,7 @@ def test_gap_fold_is_batch_split_invariant(times, cuts):
     batch is shuffled deterministically before feeding."""
     import pandas as pd
 
-    from takuan_spark.streaming.stateful import make_gap_update_fn
+    from takuan_zoo.streaming.stateful import make_gap_update_fn
 
     fn = make_gap_update_fn("user_id", 10**15)
     ordered = sorted(times)
@@ -1402,7 +1399,7 @@ def test_buffered_gap_fold_is_arrival_order_invariant(
     no arrival-order assumption at all."""
     import pandas as pd
 
-    from takuan_spark.streaming.stateful import make_gap_buffer_update_fn
+    from takuan_zoo.streaming.stateful import make_gap_buffer_update_fn
 
     fn = make_gap_buffer_update_fn("user_id", 10**15)
     batches: dict[int, list[int]] = {}
@@ -1455,7 +1452,7 @@ def test_unordered_state_flushes_without_no_data_microbatches(spark):
     no-data micro-batch: with noDataMicroBatches disabled the row must
     still emit every user. A sentinel scheme that left sentinel-2's
     watermark below flush_at would return an empty sink here."""
-    from takuan_spark.queries import REGISTRY, _load
+    from takuan_zoo.queries import REGISTRY, _load
 
     _load()
     sf_dir = "/root/testdata/sf0.001"
@@ -1607,7 +1604,7 @@ def test_stream_stream_interval_join_right_outer(spark, stream_env):
     row emits NOTHING — the asymmetry that separates rightOuter from
     fullOuter and is exactly what a "failures that never escalated"
     audit depends on."""
-    from takuan_spark.streaming.windows import interval_join
+    from takuan_zoo.streaming.windows import interval_join
 
     rows = [
         ("9.9.9.9", "2026-08-13 06:00:00", "ssh", "auth-failure"),
@@ -1673,7 +1670,7 @@ def test_stream_stream_join_is_append_only(spark, stream_env):
     join emission is not a keyed revision the engine could merge."""
     from pyspark.errors import AnalysisException
 
-    from takuan_spark.streaming.windows import interval_join
+    from takuan_zoo.streaming.windows import interval_join
 
     _write_events_chunk(
         stream_env["src"] / "c1.parquet",
@@ -1741,7 +1738,7 @@ def test_vectorized_folds_match_reference_loop_semantics():
     import numpy as np
     import pandas as pd
 
-    from takuan_spark.streaming.stateful import (
+    from takuan_zoo.streaming.stateful import (
         _alerts_frame,
         _epoch_secs,
         _fold_gap,

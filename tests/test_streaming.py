@@ -45,8 +45,8 @@ def env(tmp_path):
 
 
 @pytest.fixture(scope="module")
-def conf():
-    return load_config("/root/reference/config.example.yml", year=YEAR)
+def conf(config_path):
+    return load_config(config_path, year=YEAR)
 
 
 def _run(spark, conf, env, post_hook=None):

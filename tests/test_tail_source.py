@@ -156,7 +156,7 @@ def test_tail_resumes_from_checkpoint_without_duplicates(spark, tailed, tmp_path
     assert [r["value"] for r in rows] == ["first", "second", "third"]
 
 
-def test_pipeline_runs_over_tailed_live_file(spark, tmp_path):
+def test_pipeline_runs_over_tailed_live_file(spark, tmp_path, config_path):
     """The full parse→rules→enrich pipeline consumes a single live
     appended log file through the filetail source (the reference
     sensor's exact shape: one file, byte offsets, live appends)."""
@@ -165,7 +165,7 @@ def test_pipeline_runs_over_tailed_live_file(spark, tmp_path):
 
     log = tmp_path / "auth.log"
     log.write_text(AUTH_LINES[0] + "\n")
-    conf = load_config("/root/reference/config.example.yml", year=2026)
+    conf = load_config(config_path, year=2026)
     conf = type(conf)(
         node_name=conf.node_name,
         year=conf.year,

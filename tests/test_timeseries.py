@@ -10,7 +10,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from takuan_spark.operators import timeseries as tsops
+from takuan_zoo.operators import timeseries as tsops
 
 
 def _ts(s: str) -> dt.datetime:

@@ -12,9 +12,13 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from takuan_spark.operators import dedup, retrieval, similarity
-from takuan_spark.operators.sampling import shard_assign
-from takuan_spark.operators.semdedup import semdedup_victims
+from takuan_zoo.operators import (
+    dedup,
+    retrieval,
+    similarity,
+)
+from takuan_zoo.operators.sampling import shard_assign
+from takuan_zoo.operators.semdedup import semdedup_victims
 
 
 # ------------------------------------------------------------- semdedup
@@ -283,7 +287,7 @@ def test_shard_assign_membership_stable_under_growth(spark):
 # ------------------------------------------------- unicode normalization
 
 def test_nfc_normalize_composes_and_is_idempotent(spark):
-    from takuan_spark.operators.text import nfc_normalize
+    from takuan_zoo.operators.text import nfc_normalize
 
     docs = spark.createDataFrame(
         [
@@ -348,7 +352,7 @@ def test_sft_mask_closed_form_matches_turn_walk(spark):
 
     rows = [(i, "s", " ".join(["w"] * i)) for i in range(1, 100)]
     df = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    from takuan_spark.operators.text import words
+    from takuan_zoo.operators.text import words
     from pyspark.sql import functions as F
 
     n_words = F.size(words(F.col("text")))
@@ -369,7 +373,7 @@ def test_sft_mask_closed_form_matches_turn_walk(spark):
 
 
 def test_pack_efficiency_known_values(spark):
-    from takuan_spark.queries.training import ns_pack_efficiency
+    from takuan_zoo.queries.training import ns_pack_efficiency
     import pandas as pd
     import tempfile, os
 

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from takuan_spark.operators import web
+from takuan_zoo.operators import web
 
 
 def test_host_suffixes_most_specific_first(spark):
