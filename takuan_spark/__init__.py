@@ -16,16 +16,17 @@ This package re-expresses that service Spark-first
                    datetime), shared by batch and streaming.
 - ``operators``  — parse (regex tokenize projection), rules (ordered
                    first-match-wins predicate labeling), enrich (broadcast
-                   geo / reverse-DNS joins), reports (per-address report
-                   and country top-k).
-- ``sources``    — batch/streaming readers and the byte-offset file-tail
+                   geo / reverse-DNS joins), reports (the one
+                   per-address report fold and country top-k).
+- ``sources``    — batch JSON/CSV readers and the byte-offset file-tail
                    data source.
 - ``sinks``      — parquet/CSV writers, the exactly-once DuckDB and JDBC
                    sinks, and the report publishers (file drop, git,
                    webhook).
 - ``streaming``  — Structured Streaming wrap of the compiled pipeline
                    (micro-batch trigger, checkpointing, quarantine) and
-                   the incremental report fold.
+                   the per-epoch report partials with their merged
+                   report.
 - ``queries``    — the reference's report semantics as named
                    (spark_builder, oracle_sql) pairs over the test
                    tables; ``--list-queries`` prints them.

@@ -44,11 +44,16 @@ def _load_geo_dim(spark: SparkSession, path: str):
 
 
 def _report_hook(out_dir: str, webhook_url: str | None = None):
-    """Per-flush report job: address report + country top-k CSVs and the
-    formatted summary on stdout. Pure set-oriented queries over the
-    just-flushed batch — the hourly-report semantics of the reference,
-    triggered per flush here (period scheduling belongs to the caller's
-    cron; the engine-side contract is 'a report per delivered batch')."""
+    """Per-flush report job: address report CSV, country top-k and the
+    formatted summary on stdout (and POSTed to ``webhook_url`` if set).
+    Pure set-oriented queries over the just-flushed batch — the
+    hourly-report semantics of the reference, triggered per flush here
+    (period scheduling belongs to the caller's cron; the engine-side
+    contract is 'a report per delivered batch').
+
+    A webhook that cannot be reached is logged to stderr and skipped: by
+    then the CSV and the summary are written, and raising would fail the
+    streaming query and replay the epoch."""
     from takuan_spark.operators.reports import (
         address_report,
         country_topk,
@@ -60,16 +65,20 @@ def _report_hook(out_dir: str, webhook_url: str | None = None):
     send = webhook_publisher(webhook_url) if webhook_url else None
 
     def hook(batch, epoch_id: int) -> None:
-        if batch.isEmpty():
+        total = batch.count()
+        if not total:
             return
         report = address_report(batch)
         write_csv_report(report, f"{out_dir}/address_report_{epoch_id:06d}.csv")
         topk = country_topk(batch).collect()
-        total = batch.count()
         status = format_country_summary(topk, total)
         print(status, flush=True)
         if send:  # the reference's tweet (twitter.go:82-99), generalized
-            send({"epoch_id": epoch_id, "n_events": total, "status": status})
+            try:
+                send({"epoch_id": epoch_id, "n_events": total, "status": status})
+            except OSError as e:  # URLError, HTTPError, timeouts
+                print(f"webhook failed for epoch {epoch_id}: {e}",
+                      file=sys.stderr, flush=True)
 
     return hook
 

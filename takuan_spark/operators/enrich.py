@@ -104,50 +104,34 @@ def ip_range_enrich_bucketed(
     )
 
 
-def stamp_metadata(
-    df: DataFrame,
-    *,
-    sensor: str,
-    node_name: str,
-    detected_at_col: str = "detected_at",
-) -> DataFrame:
-    """Stamp sensor name, node name and processing time (O11)."""
+def stamp_metadata(df: DataFrame, *, sensor: str, node_name: str) -> DataFrame:
+    """Stamp sensor name, node name and processing time (``detected_at``,
+    O11)."""
     return (
         df.withColumn("sensor", F.lit(sensor))
         .withColumn("node_name", F.lit(node_name))
-        .withColumn(detected_at_col, F.current_timestamp())
+        .withColumn("detected_at", F.current_timestamp())
     )
 
 
-def geo_enrich(
-    events: DataFrame,
-    geo_dim: DataFrame,
-    *,
-    on: str = "address",
-    dim_key: str = "ip",
-) -> DataFrame:
-    """Broadcast left-outer join against the geo dimension (O12).
+def geo_enrich(events: DataFrame, geo_dim: DataFrame) -> DataFrame:
+    """Broadcast left-outer join of ``events.address`` against the geo
+    dimension's ``ip`` (O12).
 
-    ``geo_dim`` must carry ``(dim_key, country_code, country_name)``. The
+    ``geo_dim`` must carry ``(ip, country_code, country_name)``. The
     explicit ``F.broadcast`` hint makes the plan independent of the
     autoBroadcast threshold — a geo dim is always the small side.
     """
     dim = F.broadcast(
         geo_dim.select(
-            F.col(dim_key).alias("__geo_key"), *[F.col(c) for c in GEO_COLUMNS]
+            F.col("ip").alias("__geo_key"), *[F.col(c) for c in GEO_COLUMNS]
         )
     )
-    joined = events.join(dim, events[on] == dim["__geo_key"], "left")
+    joined = events.join(dim, events["address"] == dim["__geo_key"], "left")
     return joined.drop("__geo_key")
 
 
-def re_enrich(
-    events: DataFrame,
-    geo_dim: DataFrame,
-    *,
-    on: str = "address",
-    dim_key: str = "ip",
-) -> DataFrame:
+def re_enrich(events: DataFrame, geo_dim: DataFrame) -> DataFrame:
     """Full-table geo refresh — the ``-geo`` batch job (O28).
 
     Returns the events table with country columns replaced by the new
@@ -157,12 +141,12 @@ def re_enrich(
     """
     dim = F.broadcast(
         geo_dim.select(
-            F.col(dim_key).alias("__geo_key"),
+            F.col("ip").alias("__geo_key"),
             F.col("country_code").alias("__new_cc"),
             F.col("country_name").alias("__new_cn"),
         )
     )
-    joined = events.join(dim, events[on] == dim["__geo_key"], "left")
+    joined = events.join(dim, events["address"] == dim["__geo_key"], "left")
     return (
         joined.withColumn(
             "country_code", F.coalesce(F.col("__new_cc"), F.col("country_code"))

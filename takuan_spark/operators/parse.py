@@ -46,14 +46,9 @@ def squeeze_spaces(c: Column) -> Column:
     return F.regexp_replace(c, r" +", " ")
 
 
-def tokenize(
-    lines: DataFrame,
-    parser: ParserSpec,
-    *,
-    line_col: str = "value",
-    keep_line: bool = True,
-) -> DataFrame:
-    """Project each log line into named token columns.
+def tokenize(lines: DataFrame, parser: ParserSpec) -> DataFrame:
+    """Project each log line (column ``value``) into named token columns,
+    keeping the raw line as ``payload``.
 
     regex kind: one `regexp_extract` per token over the same pattern —
     Catalyst dedupes the regex compilation, and the leading `rlike`
@@ -62,15 +57,13 @@ def tokenize(
     not JSON or miss a mandatory field are dropped (the same "parse
     gate" semantics, ref: core/parser.go:65).
     """
-    line = F.col(line_col)
+    line = F.col("value")
     if parser.kind == "json":
         cols = [
             F.get_json_object(line, parser.json_path(name)).alias(name)
             for name in sorted(parser.tokens)
         ]
-        if keep_line:
-            cols = [line.alias("payload"), *cols]
-        out = lines.select(*cols)
+        out = lines.select(line.alias("payload"), *cols)
         gate = F.col("address").isNotNull() & F.col("datetime").isNotNull()
         return out.where(gate)
     expr = parser.compiled_expression()
@@ -78,19 +71,11 @@ def tokenize(
         F.regexp_extract(line, expr, idx).alias(name)
         for name, idx in sorted(parser.tokens.items(), key=lambda kv: kv[1])
     ]
-    if keep_line:
-        cols = [line.alias("payload"), *cols]
-    return lines.where(line.rlike(expr)).select(*cols)
+    return lines.where(line.rlike(expr)).select(line.alias("payload"), *cols)
 
 
-def parse_datetime(
-    tokens: DataFrame,
-    parser: ParserSpec,
-    *,
-    year: int,
-    out_col: str = "created_at",
-) -> DataFrame:
-    """Repair + parse the ``datetime`` token into a timestamp column.
+def parse_datetime(tokens: DataFrame, parser: ParserSpec, *, year: int) -> DataFrame:
+    """Repair + parse the ``datetime`` token into ``created_at``.
 
     ``try_to_timestamp`` (NULL on failure) rather than ``to_timestamp``
     (exception) implements the reference's error-channel behavior: a bad
@@ -104,4 +89,4 @@ def parse_datetime(
     """
     dt = squeeze_spaces(inject_year(F.col("datetime"), year))
     fmt = parser.java_datetime_format()
-    return tokens.withColumn(out_col, F.try_to_timestamp(dt, F.lit(fmt)))
+    return tokens.withColumn("created_at", F.try_to_timestamp(dt, F.lit(fmt)))

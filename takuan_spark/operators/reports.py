@@ -15,11 +15,20 @@ semantics as *sorted* segments (`sort_array` before `concat_ws`), and all
 orderings get stable tiebreak keys — required for oracle hashing and the
 right call for any engine.
 
-Scale notes: both queries are two-level hash aggregations — partial
-(map-side) aggregation happens before the shuffle on the group key, so at
-100 TB the shuffle carries one row per (address, sensor, rule), not one
-per event. No driver-side state; the only ``limit`` is the final top-k,
-which Spark plans as TakeOrderedAndProject (per-partition heap + merge).
+Scale notes: every report is a two-level hash aggregation. The inner
+level groups by (address, sensor, rule, country) with partial (map-side)
+aggregation before its shuffle, so at 100 TB that shuffle carries one
+row per key, not one per event. The per-address level then shuffles
+again on ``address`` (a second hash exchange: the inner exchange is
+partitioned on the whole key, not on its ``address`` prefix). No
+driver-side state; the only ``limit`` is the final top-k, which Spark
+plans as TakeOrderedAndProject (per-partition heap + merge).
+
+Counts are linear, so the per-address level does not care where its
+counts came from: :func:`report_from_counts` is the one per-address fold,
+fed by :func:`address_report` (a ``count()`` over events) and by
+``streaming.report_stream.merged_report`` (a ``sum`` over the per-epoch
+:func:`partial_report` rows).
 """
 
 from __future__ import annotations
@@ -27,94 +36,74 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: the inner grouping key of every report; country is constant per
+#: address (one geo row per IP), so carrying it through the key is free
+REPORT_KEYS = ("address", "sensor", "rule", "country_code", "country_name")
 
-def unreported(events: DataFrame, *, col: str = "reported_at") -> DataFrame:
+
+def unreported(events: DataFrame) -> DataFrame:
     """The unreported slice: ``WHERE reported_at IS NULL`` (O16,
     ref: core/aggregator.go:94)."""
-    return events.where(F.col(col).isNull())
+    return events.where(F.col("reported_at").isNull())
 
 
-def mark_reported(events: DataFrame, *, col: str = "reported_at") -> DataFrame:
-    """Batch analog of the exactly-once marker (O17, ref:
-    core/aggregator.go:109-115): set ``reported_at`` on every unreported
-    row in one set-oriented pass (caller overwrites the table). In
-    streaming this is unnecessary — the checkpoint guarantees each batch
-    is reported once.
+def report_from_counts(counts: DataFrame) -> DataFrame:
+    """The per-address fold (O18-O23) over ``REPORT_KEYS`` rows with a
+    ``cnt`` column (and optional ``first_seen`` / ``last_seen``).
+
+    Output: ``address, country_code, country_name, total_events,
+    counters[, first_seen, last_seen]`` sorted by total_events desc
+    (stable tiebreak on address). ``counters`` is the reference's
+    ``sensor/rule:count|...`` encoding with deterministic (sorted)
+    segment order. Country is the per-address ``min``, matching the
+    reference's ``addrEvents[0]`` (core/reporter.go:165-166) since it is
+    constant per address.
     """
-    return events.withColumn(
-        col, F.coalesce(F.col(col), F.current_timestamp())
+    segment = F.concat_ws(
+        ":", F.concat_ws("/", "sensor", "rule"), F.col("cnt").cast("string")
     )
+    aggs = [
+        F.min("country_code").alias("country_code"),
+        F.min("country_name").alias("country_name"),
+        F.sum("cnt").alias("total_events"),
+        F.concat_ws("|", F.sort_array(F.collect_list(segment))).alias("counters"),
+    ]
+    if "first_seen" in counts.columns:
+        aggs += [
+            F.min("first_seen").alias("first_seen"),
+            F.max("last_seen").alias("last_seen"),
+        ]
+    report = counts.groupBy("address").agg(*aggs)
+    return report.orderBy(F.desc("total_events"), F.asc("address"))
 
 
-def address_report(
-    events: DataFrame,
-    *,
-    address_col: str = "address",
-    sensor_col: str = "sensor",
-    rule_col: str = "rule",
-    country_cols: tuple[str, str] | None = ("country_code", "country_name"),
-    seen_col: str | None = None,
-) -> DataFrame:
-    """Per-address attack report (O18-O23).
-
-    Output: ``address, [country_code, country_name,] total_events,
-    counters`` sorted by total_events desc (stable tiebreak on address).
-    ``counters`` is the reference's ``sensor/rule:count|...`` encoding with
-    deterministic (sorted) segment order.
+def address_report(events: DataFrame, *, seen_col: str | None = None) -> DataFrame:
+    """Per-address attack report over events: ``count()`` per
+    ``REPORT_KEYS``, then :func:`report_from_counts`.
 
     ``seen_col`` (a timestamp column, e.g. ``created_at``) appends
     ``first_seen`` / ``last_seen`` per address — min/max fold through
     BOTH aggregation levels, so the extra fields ride the existing
     shuffle chain instead of a second scan + self-join of the fact
     (the composition cost that matters at 100 TB).
-
-    Two-level aggregation in one shuffle chain:
-    ``groupBy(address, sensor, rule).count()`` (inner, map-side combined)
-    → ``groupBy(address)`` re-aggregate. The second groupBy reuses the
-    hash partitioning on ``address`` from the first shuffle's key prefix.
     """
-    inner_keys = [address_col, sensor_col, rule_col]
-    if country_cols:
-        # country is constant per address (one geo row per IP) → first()
-        # matches the reference's addrEvents[0] (core/reporter.go:165-166).
-        # NOTE: first() here rides on the inner agg needing the columns; we
-        # instead carry them through the inner groupBy for determinism.
-        inner_keys += list(country_cols)
-    inner_aggs = [F.count("*").alias("cnt")]
-    if seen_col:
-        inner_aggs += [
-            F.min(seen_col).alias("_first_seen"),
-            F.max(seen_col).alias("_last_seen"),
-        ]
-    inner = events.groupBy(*inner_keys).agg(*inner_aggs)
-    segment = F.concat_ws(
-        ":", F.concat_ws("/", F.col(sensor_col), F.col(rule_col)), F.col("cnt")
-    )
-    aggs = [
-        F.sum("cnt").alias("total_events"),
-        F.concat_ws("|", F.sort_array(F.collect_list(segment))).alias("counters"),
-    ]
-    if country_cols:
-        aggs = [
-            F.min(country_cols[0]).alias(country_cols[0]),
-            F.min(country_cols[1]).alias(country_cols[1]),
-            *aggs,
-        ]
+    aggs = [F.count("*").alias("cnt")]
     if seen_col:
         aggs += [
-            F.min("_first_seen").alias("first_seen"),
-            F.max("_last_seen").alias("last_seen"),
+            F.min(seen_col).alias("first_seen"),
+            F.max(seen_col).alias("last_seen"),
         ]
-    report = inner.groupBy(address_col).agg(*aggs)
-    return report.orderBy(F.desc("total_events"), F.asc(address_col))
+    return report_from_counts(events.groupBy(*REPORT_KEYS).agg(*aggs))
 
 
-def country_topk(
-    events: DataFrame,
-    *,
-    country_col: str = "country_code",
-    k: int = 5,
-) -> DataFrame:
+def partial_report(batch: DataFrame) -> DataFrame:
+    """Per-batch partials: ``REPORT_KEYS`` plus the count ``n``. Kept at
+    the (sensor, rule) grain so summing ``n`` across batches and folding
+    with :func:`report_from_counts` rebuilds the counters string exactly."""
+    return batch.groupBy(*REPORT_KEYS).agg(F.count("*").alias("n"))
+
+
+def country_topk(events: DataFrame, *, k: int = 5) -> DataFrame:
     """Per-country event counts, top-k (O26, ref: core/twitter.go:48-80).
 
     ``orderBy(...).limit(k)`` plans as TakeOrderedAndProject — a true
@@ -122,8 +111,8 @@ def country_topk(
     country code keeps the result deterministic (the reference's
     sort.Slice is not stable under ties).
     """
-    counts = events.groupBy(country_col).agg(F.count("*").alias("total_events"))
-    return counts.orderBy(F.desc("total_events"), F.asc(country_col)).limit(k)
+    counts = events.groupBy("country_code").agg(F.count("*").alias("total_events"))
+    return counts.orderBy(F.desc("total_events"), F.asc("country_code")).limit(k)
 
 
 def country_flag(code: str | None) -> str:

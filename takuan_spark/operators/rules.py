@@ -41,11 +41,12 @@ def label_first_match(rules: list[RuleSpec]) -> Column:
     return col
 
 
-def apply_rules(tokens: DataFrame, rules: list[RuleSpec], *, out_col: str = "rule") -> DataFrame:
-    """Label each row with the first matching rule and drop non-matches.
+def apply_rules(tokens: DataFrame, rules: list[RuleSpec]) -> DataFrame:
+    """Label each row with the first matching rule (column ``rule``) and
+    drop non-matches.
 
     The ``isNotNull`` filter is the analog of "no rule matched → no event"
     (ref: core/sensor.go:88-106).
     """
-    labeled = tokens.withColumn(out_col, label_first_match(rules))
-    return labeled.where(F.col(out_col).isNotNull())
+    labeled = tokens.withColumn("rule", label_first_match(rules))
+    return labeled.where(F.col("rule").isNotNull())

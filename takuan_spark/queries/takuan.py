@@ -479,9 +479,7 @@ def q_log_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name").alias("country_name"),
         )
     )
-    enriched = geo_enrich(
-        events.drop("country_code", "country_name"), geo_dim, dim_key="ip"
-    )
+    enriched = geo_enrich(events.drop("country_code", "country_name"), geo_dim)
     # parsed-time report horizon: selects the first 20 days through the
     # REPAIRED timestamp, so a wrong year injection or format
     # translation changes which rows survive

@@ -1,10 +1,10 @@
 """SparkSession factory tuned for this engine.
 
 Defaults are chosen for the local[*] test harness but every knob is the
-one you would also set on a real cluster: AQE on (runtime re-planning,
-skew-join splitting, partition coalescing), Arrow on (vectorized
-pandas-UDF exchange), and a shuffle-partition count that tracks core
-count locally instead of Spark's static 200.
+one you would also set on a real cluster: AQE (Spark's default: runtime
+re-planning, skew-join splitting, partition coalescing), Arrow on
+(vectorized pandas-UDF exchange), and a shuffle-partition count that
+tracks core count locally instead of Spark's static 200.
 
 At 100 TB the same plans run unchanged; only ``spark.sql.shuffle.partitions``
 (or rather AQE's ``advisoryPartitionSizeInBytes``) and executor sizing move.
@@ -37,9 +37,6 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Let the planner pick shuffled-hash join when one side's

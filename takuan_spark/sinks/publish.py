@@ -10,8 +10,8 @@ big data, so there is nothing to distribute: the Spark engine reduces
 100 TB of events down to a report of a few hundred rows, and publication
 is plain Python at the end of the ``foreachBatch`` hook.
 
-This module supplies those side effects as composable hooks for
-``streaming/pipeline.py:start_pipeline(post_hook=...)``:
+This module supplies those side effects as plain functions over the
+aggregated report:
 
 - :func:`drop_report_csv` — the reference's CSV shape and filename
   (``report_<timestamp>.csv``, same 5-column header,
@@ -21,8 +21,8 @@ This module supplies those side effects as composable hooks for
   (``"reporting N addresses, M total events"``, reporter.go:182).
 - :func:`webhook_publisher` — the generalized form of the tweet: POST a
   JSON summary (the twitter.go:89 status text plus structured fields)
-  to an HTTP endpoint via stdlib urllib.
-- :func:`publication_hook` — composes them into one post-hook.
+  to an HTTP endpoint via stdlib urllib. The service's report hook
+  (``__main__._report_hook``) sends through it.
 """
 
 from __future__ import annotations
@@ -127,48 +127,3 @@ def webhook_publisher(
 
     return publish
 
-
-def publication_hook(
-    *,
-    repo_dir: str,
-    git: bool = False,
-    webhook_url: str | None = None,
-) -> Callable[[DataFrame, int], None]:
-    """Compose drop + git + webhook into a ``post_hook`` for
-    ``start_pipeline``: per delivered micro-batch, aggregate the address
-    report distributed-side, then publish the small result."""
-    from takuan_spark.operators.reports import (
-        address_report,
-        country_topk,
-        format_country_summary,
-    )
-
-    send = webhook_publisher(webhook_url) if webhook_url else None
-
-    def hook(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        report = address_report(batch).cache()
-        try:
-            n_addresses = report.count()
-            n_events = batch.count()
-            path = drop_report_csv(report, repo_dir)
-            if git:
-                git_publish(
-                    path, n_addresses=n_addresses, n_events=n_events
-                )
-            if send:
-                topk = country_topk(batch).collect()
-                send(
-                    {
-                        "epoch_id": epoch_id,
-                        "report_file": os.path.basename(path),
-                        "n_addresses": n_addresses,
-                        "n_events": n_events,
-                        "status": format_country_summary(topk, n_events),
-                    }
-                )
-        finally:
-            report.unpersist()
-
-    return hook

@@ -17,24 +17,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def write_events(df: DataFrame, path: str, *, mode: str = "append") -> None:
+def write_events(df: DataFrame, path: str) -> None:
     """Append an events batch to the parquet events table, partitioned by
     event date (the JDBC-shaped analog would swap ``.parquet`` for
     ``.jdbc`` — same set-oriented write, ref contrast:
     core/aggregator.go:77-79 row-at-a-time INSERT loop)."""
     (
         df.withColumn("event_date", F.to_date("created_at"))
-        .write.mode(mode)
+        .write.mode("append")
         .partitionBy("event_date")
         .parquet(path)
     )
 
 
-def write_csv_report(df: DataFrame, path: str, *, single_file: bool = True) -> None:
+def write_csv_report(df: DataFrame, path: str) -> None:
     """CSV report sink (O24, ref: core/reporter.go:124-173).
 
-    ``coalesce(1)`` only for the human-readable single-file report —
-    report outputs are top-k/aggregate sized, so this never bottlenecks.
+    ``coalesce(1)`` for the human-readable single-file report — report
+    outputs are top-k/aggregate sized, so this never bottlenecks.
     """
-    out = df.coalesce(1) if single_file else df
-    out.write.mode("overwrite").option("header", True).csv(path)
+    df.coalesce(1).write.mode("overwrite").option("header", True).csv(path)

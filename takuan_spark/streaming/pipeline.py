@@ -48,7 +48,6 @@ def compile_stream(
     *,
     paths: dict[str, str] | None = None,
     geo_dim: DataFrame | None = None,
-    max_files_per_trigger: int | None = None,
     tail_files: bool = False,
 ) -> DataFrame:
     """Streaming events DataFrame: union of all enabled sensors with the
@@ -76,12 +75,7 @@ def compile_stream(
                 .select("value")
             )
         else:
-            reader = spark.readStream
-            if max_files_per_trigger is not None:
-                reader = reader.option(
-                    "maxFilesPerTrigger", max_files_per_trigger
-                )
-            lines = reader.text(path)
+            lines = spark.readStream.text(path)
         parts.append(
             compile_sensor(
                 lines,

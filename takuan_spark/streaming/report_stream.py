@@ -5,10 +5,10 @@ ref core/reporter.go:102-168) as a streaming materialized view.
 The reference recomputes its report from the full unreported set every
 flush tick. Counts are LINEAR: the report of a union is the element-wise
 sum of per-batch reports — so the streaming form writes one partial
-report per epoch (rows = distinct addresses in that batch, tiny) and
-any reader folds the epochs with one aggregation. Same maintenance
-pattern as the CMS grids in sketch_stream.py, same exactly-once story
-(dynamic partition overwrite per epoch), same optional compaction.
+report per epoch (rows = distinct (address, sensor, rule) keys in that
+batch, tiny) and any reader sums the epochs per key and applies the same
+per-address fold the batch report uses. A replayed epoch overwrites its
+own partition (dynamic partition overwrite), so it is counted once.
 
 At 100 TB of events this is the difference between re-scanning the
 events table per report and reading (epochs x active addresses) partial
@@ -22,18 +22,15 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def partial_report(batch: DataFrame) -> DataFrame:
-    """Per-batch partials: (address, sensor, rule, country_code,
-    country_name, n). Kept at the (sensor, rule) grain so the merged
-    report can rebuild the encoded counters string exactly."""
-    return batch.groupBy(
-        "address", "sensor", "rule", "country_code", "country_name"
-    ).agg(F.count("*").alias("n"))
+from takuan_spark.operators.reports import (
+    REPORT_KEYS,
+    partial_report,
+    report_from_counts,
+)
 
 
 def report_sink(table_path: str) -> Callable[[DataFrame, int], None]:
-    """``foreachBatch`` sink appending each epoch's partial report."""
+    """``foreachBatch`` sink writing each epoch's partial report."""
 
     def _sink(batch: DataFrame, epoch_id: int) -> None:
         (
@@ -48,46 +45,11 @@ def report_sink(table_path: str) -> Callable[[DataFrame, int], None]:
     return _sink
 
 
-def start_report_stream(
-    events: DataFrame,
-    table_path: str,
-    checkpoint_path: str,
-    *,
-    available_now: bool = False,
-    trigger_secs: int = 10,
-):
-    writer = events.writeStream.foreachBatch(report_sink(table_path)).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_secs} seconds")
-    return writer.start()
-
-
 def merged_report(spark, table_path: str) -> DataFrame:
     """The current report, identical to running the batch
     ``operators.reports.address_report`` over every event ingested:
-    sum the per-epoch partials, rebuild the deterministic counters
-    encoding (sorted ``sensor/rule:count`` segments joined with '|'),
-    order by (total desc, address)."""
+    sum the per-epoch partials per key, then the shared per-address
+    fold (``operators.reports.report_from_counts``)."""
     partials = spark.read.parquet(table_path).drop("epoch")
-    per_rule = partials.groupBy(
-        "address", "sensor", "rule", "country_code", "country_name"
-    ).agg(F.sum("n").alias("cnt"))
-    seg = F.concat_ws(
-        ":", F.concat_ws("/", "sensor", "rule"), F.col("cnt").cast("string")
-    )
-    return (
-        per_rule.groupBy("address")
-        .agg(
-            F.min("country_code").alias("country_code"),
-            F.min("country_name").alias("country_name"),
-            F.sum("cnt").alias("total_events"),
-            F.concat_ws(
-                "|", F.sort_array(F.collect_list(seg))
-            ).alias("counters"),
-        )
-        .orderBy(F.desc("total_events"), F.asc("address"))
-    )
+    counts = partials.groupBy(*REPORT_KEYS).agg(F.sum("n").alias("cnt"))
+    return report_from_counts(counts)

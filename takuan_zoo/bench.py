@@ -279,7 +279,7 @@ def main() -> None:
 
         def build_pipeline():
             events = compile_batch(spark, conf, paths=paths)
-            return address_report(events, country_cols=None)
+            return address_report(events)
 
         # interleaved passes: whole suite REPEATS times, median per
         # query across passes (see module docstring)

@@ -1,21 +1,24 @@
-"""Report publication hooks (ref: core/reporter.go:120-207 git drop,
-core/twitter.go:82-99 status post)."""
+"""Report publication (ref: core/reporter.go:120-207 git drop,
+core/twitter.go:82-99 status post) and the service's per-epoch report
+hook that posts the status."""
 
 from __future__ import annotations
 
 import csv
+import glob
 import http.server
 import json
+import socket
 import subprocess
 import threading
 
 import pytest
 
+from takuan_spark.__main__ import _report_hook
 from takuan_spark.sinks.publish import (
     REPORT_COLUMNS,
     drop_report_csv,
     git_publish,
-    publication_hook,
 )
 
 
@@ -68,7 +71,9 @@ def test_git_publish_commits_with_reference_message(spark, events, tmp_path):
     assert clean == ""
 
 
-def test_publication_hook_end_to_end_with_webhook(spark, events, tmp_path):
+@pytest.fixture()
+def webhook():
+    """A live local HTTP endpoint; yields (url, received payloads)."""
     received = []
 
     class Handler(http.server.BaseHTTPRequestHandler):
@@ -85,18 +90,46 @@ def test_publication_hook_end_to_end_with_webhook(spark, events, tmp_path):
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
     try:
-        hook = publication_hook(
-            repo_dir=str(tmp_path),
-            webhook_url=f"http://127.0.0.1:{srv.server_port}/report",
-        )
-        hook(events, epoch_id=7)
+        yield f"http://127.0.0.1:{srv.server_port}/report", received
     finally:
         srv.shutdown()
+        srv.server_close()
 
-    assert len(received) == 1
-    payload = received[0]
-    assert payload["epoch_id"] == 7
-    assert payload["n_addresses"] == 2
-    assert payload["n_events"] == 4
-    assert payload["report_file"].startswith("report_")
-    assert "4 events:" in payload["status"]
+
+def test_report_hook_posts_webhook_summary(spark, events, tmp_path, webhook, capsys):
+    url, received = webhook
+    _report_hook(str(tmp_path), url)(events, 7)
+
+    printed = capsys.readouterr().out.strip()
+    assert printed.startswith("4 events:")
+    assert received == [{"epoch_id": 7, "n_events": 4, "status": printed}]
+    assert glob.glob(f"{tmp_path}/address_report_000007.csv/part-*.csv")
+
+
+def test_report_hook_empty_batch_posts_and_prints_nothing(
+    spark, events, tmp_path, webhook, capsys
+):
+    url, received = webhook
+    _report_hook(str(tmp_path), url)(events.where("address = 'none'"), 8)
+
+    assert capsys.readouterr().out == ""
+    assert received == []
+    assert not glob.glob(f"{tmp_path}/address_report_*")
+
+
+def test_report_hook_survives_webhook_outage(spark, events, tmp_path, capsys):
+    # a port nothing listens on: the send raises URLError (connection
+    # refused), which must not escape into foreachBatch and fail the query
+    with socket.socket() as s:
+        s.bind(("127.0.0.1", 0))
+        port = s.getsockname()[1]
+    _report_hook(str(tmp_path), f"http://127.0.0.1:{port}/report")(events, 3)
+
+    captured = capsys.readouterr()
+    assert captured.out.startswith("4 events:")
+    assert "webhook failed for epoch 3" in captured.err
+    parts = glob.glob(f"{tmp_path}/address_report_000003.csv/part-*.csv")
+    assert len(parts) == 1
+    with open(parts[0]) as fp:
+        rows = list(csv.reader(fp))
+    assert rows[1][:4] == ["203.0.113.7", "CN", "China", "3"]

@@ -1,18 +1,18 @@
 """Incremental attack report: the merged streaming view must equal the
-batch address_report over everything ingested, and replays must not
-double-count."""
+batch address_report over everything ingested, replays must not
+double-count, and both reports must plan as the same two-level
+aggregation."""
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from takuan_spark.operators.reports import address_report
-from takuan_spark.streaming.report_stream import (
-    merged_report,
-    report_sink,
-    start_report_stream,
-)
+from takuan_spark.streaming.report_stream import merged_report, report_sink
 
 SCHEMA = (
     "address string, sensor string, rule string, "
@@ -48,9 +48,13 @@ def env(tmp_path):
 
 
 def _drain(spark, env):
-    stream = spark.readStream.schema(SCHEMA).parquet(str(env["src"]))
-    q = start_report_stream(
-        stream, env["table"], env["ckpt"], available_now=True
+    q = (
+        spark.readStream.schema(SCHEMA)
+        .parquet(str(env["src"]))
+        .writeStream.foreachBatch(report_sink(env["table"]))
+        .option("checkpointLocation", env["ckpt"])
+        .trigger(availableNow=True)
+        .start()
     )
     q.awaitTermination(120)
 
@@ -78,3 +82,42 @@ def test_replayed_epoch_does_not_double_count(spark, env):
     sink(batch, 5)  # replay
     second = [tuple(r) for r in merged_report(spark, env["table"]).collect()]
     assert first == second
+
+
+def _plan_shape(df) -> dict[str, int]:
+    plan = df._jdf.queryExecution().explainString(
+        df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"
+        )
+    )
+    tree = plan.split("\n\n")[0]
+    ops = re.findall(r"(\w+) \(\d+\)", tree)
+    kinds = re.findall(r"Arguments: (hashpartitioning|rangepartitioning)", plan)
+    return {
+        "hash_exchanges": kinds.count("hashpartitioning"),
+        "range_exchanges": kinds.count("rangepartitioning"),
+        "HashAggregate": ops.count("HashAggregate"),
+        "ObjectHashAggregate": ops.count("ObjectHashAggregate"),
+        "SortAggregate": ops.count("SortAggregate"),
+    }
+
+
+def test_report_plans_share_one_two_level_shape(spark, env):
+    # every report is the inner (address, sensor, rule, country) count or
+    # sum, then the one per-address fold: one hash exchange per level,
+    # one range exchange for the ordering, hash aggregates for the
+    # counts and object-hash aggregates for the counters' collect_list
+    events = spark.createDataFrame(_events(0, 30)).withColumn(
+        "created_at", F.current_timestamp()
+    )
+    report_sink(env["table"])(events, 0)
+    want = {
+        "hash_exchanges": 2,
+        "range_exchanges": 1,
+        "HashAggregate": 2,
+        "ObjectHashAggregate": 2,
+        "SortAggregate": 0,
+    }
+    assert _plan_shape(address_report(events)) == want
+    assert _plan_shape(address_report(events, seen_col="created_at")) == want
+    assert _plan_shape(merged_report(spark, env["table"])) == want
