@@ -88,7 +88,7 @@ def _run_geo_batch(spark: SparkSession, events_path: str, geo_dim_path: str) -> 
     (broadcast re-enrich), swapping the table directory.
 
     The rewrite PRESERVES the streaming sink's ``event_date``
-    partitioning (writers.py:write_events) — a flat rewrite would leave
+    partitioning (writers.py:write_epoch) — a flat rewrite would leave
     partition dirs and flat part files under one root and every later
     read would fail on conflicting directory structures. The swap
     sequence also cleans up leftovers from a previously crashed swap

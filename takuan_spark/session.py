@@ -118,12 +118,15 @@ def get_spark(
     # to the final location at task commit — one rename per file, no
     # O(files) job-commit phase. The trade (documented upstream in
     # MAPREDUCE-6336/SPARK-20107): a job that FAILS mid-commit can leave
-    # partial files behind, and that includes the service's events
-    # table. On real deployments writing to object storage this knob is
-    # superseded by cloud-native committers (magic/staging), which make
-    # the same one-move trade safely. _SUCCESS markers are also skipped:
-    # nothing in the engine or its readers consumes them; each is one
-    # extra create+close per write job.
+    # partial files behind. The service's events and quarantine writes
+    # land in ``_staging/epoch=<N>/`` first, so partial files can only
+    # sit there, and the replay of epoch N overwrites that stage
+    # (sinks/writers.py:write_epoch). On real deployments writing to
+    # object storage this knob is superseded by cloud-native committers
+    # (magic/staging), which make the same one-move trade safely.
+    # _SUCCESS markers are also skipped: nothing in the engine or its
+    # readers consumes them; each is one extra create+close per write
+    # job.
     builder = builder.config(
         "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2"
     ).config(

@@ -10,25 +10,18 @@ replayed with the same ``epoch_id``), so a sink that records delivered
 exactly-once end-to-end — the reference's ``reported_at`` protocol as a
 two-line transactional guard.
 
-Two DuckDB forms:
-
-- :func:`duckdb_exactly_once_sink` — Arrow transfer through the driver
-  (``batch.toPandas()``). Compact, right for small report batches; the
-  data volume a driver can funnel is the ceiling.
-- :func:`duckdb_staged_sink` — the batch is written to parquet by the
-  EXECUTORS (distributed, full cluster parallelism), and the database
-  ingests the staged files itself (``read_parquet``) inside the same
-  guarded transaction. The driver never touches row data — only the
-  epoch bookkeeping — so batch size is bounded by the cluster, not the
-  driver. This is the scale shape; the same staging idea over real JDBC
-  (staging table + transactional promote, tested against embedded
-  Derby) is ``sinks/jdbc.py:jdbc_exactly_once_sink``.
+The batch crosses the driver as Arrow (``batch.toArrow()``), which keeps
+Spark's column types, so the table a first epoch creates is typed even
+when that epoch is empty or a column is all null; the data volume a
+driver can funnel is the ceiling. The events and quarantine parquet are
+made exactly-once by epoch-named files instead
+(``sinks/writers.py:write_epoch``); the same guard over real JDBC
+(staging table + transactional promote, tested against embedded Derby)
+is ``sinks/jdbc.py:jdbc_exactly_once_sink``.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
@@ -69,8 +62,7 @@ def duckdb_exactly_once_sink(
                 return
             # materialize AFTER the guard: a replayed epoch must not pay
             # the full batch recompute + Arrow transfer it then discards
-            pdf = batch.toPandas()
-            con.register("_batch_df", pdf)
+            con.register("_batch_df", batch.toArrow())
             con.execute(
                 f"CREATE TABLE IF NOT EXISTS {table} AS "
                 "SELECT * FROM _batch_df WHERE 1 = 0"
@@ -80,183 +72,6 @@ def duckdb_exactly_once_sink(
                 f"INSERT INTO {EPOCH_TABLE} VALUES (?, ?)", [table, epoch_id]
             )
             con.execute("COMMIT")
-        finally:
-            con.close()
-
-    return _sink
-
-
-def duckdb_staged_sink(
-    db_path: str, table: str, stage_dir: str
-) -> Callable[[DataFrame, int], None]:
-    """``foreachBatch`` sink with a distributed staging step: executors
-    write the batch as parquet under ``stage_dir/epoch=<id>/``, then one
-    transaction ingests the staged directory via DuckDB ``read_parquet``
-    and registers the epoch. Exactly-once under replay:
-
-    - replayed epoch already registered → skip before any work;
-    - replayed epoch NOT registered (crash before commit) → the parquet
-      overwrite re-stages deterministically and the single transaction
-      ingests once;
-    - crash mid-ingest → transaction rolls back, stage dir remains for
-      the replay to overwrite.
-
-    The staged directory is removed after a successful commit (it is a
-    spool, not a table). Row data never crosses the driver: the write
-    is a cluster-parallel parquet job and the ingest is DB-side I/O.
-    """
-
-    def _sink(batch: DataFrame, epoch_id: int) -> None:
-        import duckdb
-
-        epoch_dir = os.path.join(stage_dir, f"epoch={epoch_id}")
-        con = duckdb.connect(db_path)
-        try:
-            con.execute(
-                f"CREATE TABLE IF NOT EXISTS {EPOCH_TABLE} "
-                "(tbl VARCHAR, epoch_id BIGINT)"
-            )
-            seen = con.execute(
-                f"SELECT 1 FROM {EPOCH_TABLE} WHERE tbl = ? AND epoch_id = ?",
-                [table, epoch_id],
-            ).fetchone()
-            if seen:
-                # epoch already delivered: also reap a spool left behind
-                # by a crash between COMMIT and the post-commit cleanup
-                shutil.rmtree(epoch_dir, ignore_errors=True)
-                return
-            # distributed stage (overwrite: a half-written replay spool
-            # from a previous crash is replaced wholesale)
-            batch.write.mode("overwrite").parquet(epoch_dir)
-            glob = os.path.join(epoch_dir, "*.parquet")
-            import glob as _glob
-
-            if not _glob.glob(glob):
-                # empty micro-batch: zero part files staged, and
-                # read_parquet on a matchless glob raises — which would
-                # wedge the stream on this epoch forever. Register the
-                # epoch as delivered (it delivered nothing) and move on.
-                con.execute(
-                    f"INSERT INTO {EPOCH_TABLE} VALUES (?, ?)",
-                    [table, epoch_id],
-                )
-                shutil.rmtree(epoch_dir, ignore_errors=True)
-                return
-            con.execute("BEGIN")
-            # guard re-check inside the transaction (two concurrent
-            # replays: second one loses on the epoch insert conflict
-            # or sees the row here)
-            seen = con.execute(
-                f"SELECT 1 FROM {EPOCH_TABLE} WHERE tbl = ? AND epoch_id = ?",
-                [table, epoch_id],
-            ).fetchone()
-            if seen:
-                con.execute("ROLLBACK")
-                shutil.rmtree(epoch_dir, ignore_errors=True)
-                return
-            con.execute(
-                f"CREATE TABLE IF NOT EXISTS {table} AS "
-                f"SELECT * FROM read_parquet('{glob}') WHERE 1 = 0"
-            )
-            con.execute(
-                f"INSERT INTO {table} SELECT * FROM read_parquet('{glob}')"
-            )
-            con.execute(
-                f"INSERT INTO {EPOCH_TABLE} VALUES (?, ?)", [table, epoch_id]
-            )
-            con.execute("COMMIT")
-            shutil.rmtree(epoch_dir, ignore_errors=True)
-        finally:
-            con.close()
-
-    return _sink
-
-
-UPSERT_EPOCH_TABLE = "_upsert_epochs"
-
-
-def duckdb_upsert_sink(
-    db_path: str, table: str, key_cols: list[str], stage_dir: str
-) -> Callable[[DataFrame, int], None]:
-    """``foreachBatch`` UPSERT sink for **update output mode** — the
-    live-dashboard shape: each micro-batch carries the REVISED aggregate
-    rows for every key updated in that batch, and the sink MERGEs them
-    by key (delete-then-insert inside one transaction — DuckDB 1.0 has
-    no ``MERGE INTO``; the two statements are its exact set-oriented
-    equivalent), so the table always holds the latest value per key.
-
-    Same exactly-once staging protocol as :func:`duckdb_staged_sink`
-    (executors write the batch as parquet, the DB ingests the staged
-    files itself, and a per-epoch registry row commits in the same
-    transaction), with one addition: the registry records ``n_rows``
-    per epoch, so a caller can assert the update-mode contract —
-    intermediate emissions happened (>= 2 non-empty epochs) and keys
-    were re-emitted with revised values (sum of emitted rows exceeds
-    the final key count) — from the sink's own bookkeeping rather than
-    engine progress events. Idempotent under BOTH replay paths: a
-    registered epoch is skipped outright, and an unregistered replay
-    re-stages and re-merges to the same final state (upsert of the
-    same revision is a no-op).
-    """
-
-    def _sink(batch: DataFrame, epoch_id: int) -> None:
-        import duckdb
-
-        epoch_dir = os.path.join(stage_dir, f"epoch={epoch_id}")
-        con = duckdb.connect(db_path)
-        try:
-            con.execute(
-                f"CREATE TABLE IF NOT EXISTS {UPSERT_EPOCH_TABLE} "
-                "(tbl VARCHAR, epoch_id BIGINT, n_rows BIGINT)"
-            )
-            seen = con.execute(
-                f"SELECT 1 FROM {UPSERT_EPOCH_TABLE} "
-                "WHERE tbl = ? AND epoch_id = ?",
-                [table, epoch_id],
-            ).fetchone()
-            if seen:
-                shutil.rmtree(epoch_dir, ignore_errors=True)
-                return
-            batch.write.mode("overwrite").parquet(epoch_dir)
-            glob = os.path.join(epoch_dir, "*.parquet")
-            import glob as _glob
-
-            if not _glob.glob(glob):
-                con.execute(
-                    f"INSERT INTO {UPSERT_EPOCH_TABLE} VALUES (?, ?, 0)",
-                    [table, epoch_id],
-                )
-                shutil.rmtree(epoch_dir, ignore_errors=True)
-                return
-            con.execute("BEGIN")
-            seen = con.execute(
-                f"SELECT 1 FROM {UPSERT_EPOCH_TABLE} "
-                "WHERE tbl = ? AND epoch_id = ?",
-                [table, epoch_id],
-            ).fetchone()
-            if seen:
-                con.execute("ROLLBACK")
-                shutil.rmtree(epoch_dir, ignore_errors=True)
-                return
-            con.execute(
-                f"CREATE TABLE IF NOT EXISTS {table} AS "
-                f"SELECT * FROM read_parquet('{glob}') WHERE 1 = 0"
-            )
-            match = " AND ".join(f"t.{k} = s.{k}" for k in key_cols)
-            con.execute(
-                f"DELETE FROM {table} t "
-                f"USING read_parquet('{glob}') s WHERE {match}"
-            )
-            n = con.execute(
-                f"INSERT INTO {table} "
-                f"SELECT * FROM read_parquet('{glob}')"
-            ).fetchone()
-            con.execute(
-                f"INSERT INTO {UPSERT_EPOCH_TABLE} VALUES (?, ?, ?)",
-                [table, epoch_id, int(n[0]) if n else 0],
-            )
-            con.execute("COMMIT")
-            shutil.rmtree(epoch_dir, ignore_errors=True)
         finally:
             con.close()
 

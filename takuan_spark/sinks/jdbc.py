@@ -24,8 +24,9 @@ change. Three surfaces:
   A replayed epoch (Structured Streaming re-delivers a failed batch with
   the same ``epoch_id``) finds its guard row and skips; a crash between
   staging and promote leaves the target untouched. This is the canonical
-  exactly-once JDBC pattern — the DuckDB sink in ``sinks/db.py`` pins the
-  same protocol in-process.
+  exactly-once JDBC pattern — the DuckDB sink in ``sinks/db.py`` keeps
+  the same epoch guard in-process, and the parquet tables name their
+  files by epoch instead (``sinks/writers.py:write_epoch``).
 """
 
 from __future__ import annotations

@@ -4,18 +4,25 @@ The reference buffers events and flushes them with per-row INSERTs into
 MySQL every N seconds (ref: core/aggregator.go:43-88, 219-225 — the
 author's own comment marks per-row work "SLOW"). The Spark-native sink is
 set-oriented: the micro-batch *is* the buffer (trigger interval = the
-flush period) and each batch lands as one partitioned append.
+flush period) and each batch lands as one partitioned write.
 
 Events are partitioned by date at rest: at 100 TB the events table must
 be partition-prunable by time, since every report query reads a bounded
 recent slice.
+
+The service writes each micro-batch with :func:`write_epoch`: one staged
+write, then a publish that names every file by its epoch, so a replayed
+epoch replaces its own files instead of adding a second copy.
 """
 
 from __future__ import annotations
 
+import contextlib
+import os
+import shutil
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
 
 def write_events(df: DataFrame, path: str) -> None:
     """Append an events batch to the parquet events table, partitioned by
@@ -28,6 +35,67 @@ def write_events(df: DataFrame, path: str) -> None:
         .partitionBy("event_date")
         .parquet(path)
     )
+
+
+def write_epoch(
+    batch: DataFrame, events_path: str, quarantine_path: str, epoch_id: int
+) -> None:
+    """Write one micro-batch (event columns plus ``_parse_error``) exactly
+    once per epoch: good rows into ``events_path/event_date=<d>/``, parse
+    errors flat into ``quarantine_path/`` (O29).
+
+    One write job overwrites ``events_path/_staging/epoch=<N>/``,
+    partitioned by ``_parse_error`` and ``event_date`` (null for every
+    quarantined row, so the quarantine stages into one directory). The
+    publish then visits each destination directory the stage fills,
+    deletes the ``epoch-<N>-*`` files an earlier attempt left there and
+    renames the staged files in under that prefix; last it removes the
+    stage. Structured Streaming replays an uncommitted epoch under the
+    same id with the same rows, so a replay, or a crash anywhere in this
+    function, ends with exactly one copy of the epoch in both tables.
+
+    Limits: epoch ids belong to one checkpoint (delete the checkpoint,
+    delete the outputs too); ``--geo`` renames the whole table to
+    ``part-*`` files, so a replay of an epoch left uncommitted before a
+    ``--geo`` run can duplicate it. The publish is local-filesystem
+    renames, which is where the service writes.
+    """
+    # the leading underscore keeps the stage out of every read of the table
+    stage = os.path.join(events_path, "_staging", f"epoch={epoch_id}")
+    good = ~F.col("_parse_error")
+    (
+        batch.withColumn("event_date", F.when(good, F.to_date("created_at")))
+        .write.mode("overwrite")
+        .partitionBy("_parse_error", "event_date")
+        .parquet(stage)
+    )
+    prefix = f"epoch-{epoch_id}-"
+    for flag, dest in (("false", None), ("true", quarantine_path)):
+        root = os.path.join(stage, f"_parse_error={flag}")
+        for date_dir in _listdir(root):
+            _publish(
+                os.path.join(root, date_dir),
+                dest or os.path.join(events_path, date_dir),
+                prefix,
+            )
+    shutil.rmtree(stage)
+    with contextlib.suppress(OSError):  # not empty: another writer's stage
+        os.rmdir(os.path.dirname(stage))
+
+
+def _listdir(path: str) -> list[str]:
+    return os.listdir(path) if os.path.isdir(path) else []
+
+
+def _publish(src: str, dest: str, prefix: str) -> None:
+    """Replace ``dest``'s ``prefix*`` files with the data files in ``src``."""
+    os.makedirs(dest, exist_ok=True)
+    for name in _listdir(dest):
+        if name.startswith(prefix):
+            os.remove(os.path.join(dest, name))
+    for name in _listdir(src):
+        if not name.startswith((".", "_")):  # checksums, markers
+            os.rename(os.path.join(src, name), os.path.join(dest, prefix + name))
 
 
 def write_csv_report(df: DataFrame, path: str) -> None:

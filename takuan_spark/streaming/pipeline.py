@@ -9,10 +9,11 @@ The mapping, operator by operator:
   rotation (O2) is a non-event: a rotated file is a new file.
 - micro-batch buffer + periodic flush (O14, ref core/aggregator.go:43-88,
   219-225): ``trigger(processingTime=...)`` with the flush period.
-- row-at-a-time DB sink → set-oriented ``foreachBatch`` append (O15).
+- row-at-a-time DB sink → one set-oriented ``foreachBatch`` write per
+  micro-batch (O15).
 - error side channel (O29, ref ErrorBus core/aggregator.go:24): rows that
   parse but carry an unparseable datetime keep flowing with
-  ``_parse_error = true``; the sink splits them to a quarantine path
+  ``_parse_error = true``; the sink routes them to a quarantine path
   instead of killing the query.
 - multi-sensor union (O30): one streaming DF per sensor, unioned, so one
   query/checkpoint drives all sensors — same as the reference's single
@@ -22,10 +23,13 @@ The *plan* is byte-identical to the batch one (compile_sensor); only the
 source binding differs. That is the whole point of building on
 DataFrames: batch replay and live tail share semantics by construction.
 
-Exactly-once report marking (O16/O17): not reimplemented — the streaming
-checkpoint already guarantees each micro-batch is delivered to
-``foreachBatch`` once per epoch; with an idempotent sink that is the
-reference's ``reported_at`` protocol with zero code.
+Exactly-once (O16/O17): the checkpoint replays an uncommitted
+micro-batch under the same ``epoch_id`` (a replayable source), so every
+sink only has to be idempotent per epoch. The events and quarantine
+tables name their files by epoch (``sinks/writers.py:write_epoch``), the
+DuckDB and JDBC sinks guard each epoch in their transaction, and the
+report files are named by epoch. That is the reference's
+``reported_at`` protocol without a per-row update.
 """
 
 from __future__ import annotations
@@ -40,6 +44,7 @@ from pyspark.sql.streaming import StreamingQuery
 from takuan_spark.config import PipelineConfig
 from takuan_spark.operators.enrich import geo_enrich
 from takuan_spark.plans.compiler import EVENT_COLUMNS, compile_sensor
+from takuan_spark.sinks.writers import write_epoch
 
 
 def compile_stream(
@@ -101,24 +106,18 @@ def split_sink(
     *,
     post_hook: Callable[[DataFrame, int], None] | None = None,
 ) -> Callable[[DataFrame, int], None]:
-    """foreachBatch sink: good rows → date-partitioned events table,
-    parse errors → quarantine (O29). ``post_hook`` is the report-job
-    attachment point (the reference's reporter goroutine)."""
+    """foreachBatch sink: one write per epoch puts good rows in the
+    date-partitioned events table and parse errors in quarantine (O29),
+    both exactly once under replay (``sinks/writers.py:write_epoch``).
+    ``post_hook`` is the report-job attachment point (the reference's
+    reporter goroutine); it gets the good rows of the persisted batch."""
 
     def _sink(batch: DataFrame, epoch_id: int) -> None:
         batch = batch.persist()
         try:
-            good = batch.where(~F.col("_parse_error")).drop("_parse_error")
-            (
-                good.withColumn("event_date", F.to_date("created_at"))
-                .write.mode("append")
-                .partitionBy("event_date")
-                .parquet(events_path)
-            )
-            bad = batch.where(F.col("_parse_error")).drop("_parse_error")
-            if not bad.isEmpty():
-                bad.write.mode("append").parquet(quarantine_path)
+            write_epoch(batch, events_path, quarantine_path, epoch_id)
             if post_hook is not None:
+                good = batch.where(~F.col("_parse_error")).drop("_parse_error")
                 post_hook(good, epoch_id)
         finally:
             batch.unpersist()

@@ -2959,8 +2959,8 @@ def q_stream_static_join_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     "REVISED aggregate in every micro-batch that updates it (the "
     "live-dashboard shape), and the sink must upsert by key rather "
     "than append. Events arrive as 4 time-quartile epoch files; the "
-    "sink is the real duckdb_upsert_sink (sinks/db.py): executors "
-    "stage each batch as parquet, the DB merges it by key "
+    "sink is the real duckdb_upsert_sink (takuan_zoo/sinks/db.py): "
+    "executors stage each batch as parquet, the DB merges it by key "
     "(delete-then-insert) and registers the epoch with its row count "
     "in ONE transaction — the same exactly-once registry protocol the "
     "db-sink replay tests prove, applied to the merge shape. The "
@@ -2978,7 +2978,7 @@ def q_stream_static_join_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     "driver; state is one long per active key.",
 )
 def q_stream_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from takuan_spark.sinks.db import UPSERT_EPOCH_TABLE, duckdb_upsert_sink
+    from takuan_zoo.sinks.db import UPSERT_EPOCH_TABLE, duckdb_upsert_sink
 
     base = _scratch(sf_dir, "update_mode")
     src, stage, ckpt = f"{base}/src", f"{base}/stage", f"{base}/ckpt"
@@ -3086,7 +3086,7 @@ def q_stream_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     "revised windows per batch, row data never on the driver.",
 )
 def q_stream_update_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from takuan_spark.sinks.db import UPSERT_EPOCH_TABLE, duckdb_upsert_sink
+    from takuan_zoo.sinks.db import UPSERT_EPOCH_TABLE, duckdb_upsert_sink
     from takuan_zoo.streaming.windows import windowed_counts
 
     base = _scratch(sf_dir, "update_windowed")

@@ -1,0 +1,207 @@
+"""Every service output is exactly-once when an epoch is replayed
+(O15/O17/O29): the service is made to fail once at a point inside
+``foreachBatch``, rerun on the same checkpoint, and its events,
+quarantine, DuckDB and report outputs must hold each epoch once. The
+faults patch module attributes in place, so ``main`` wires the service
+it always wires."""
+
+from __future__ import annotations
+
+import datetime as dt
+import glob
+import os
+
+import duckdb
+import pytest
+
+import takuan_spark.__main__ as cli
+from takuan_spark.sinks import db
+from takuan_spark.streaming.pipeline import split_sink
+
+CONFIG_TMPL = """
+name: 'fault-test-node'
+database:
+  period: 5
+reports:
+  enabled: true
+  period: 60
+sensors:
+- name: ssh
+  filename: {ssh_dir}
+  enabled: true
+  parser:
+    expression: '^(.+)\\s+.+\\s+sshd\\[\\d+\\]: (.+)\\s+(.+)\\s+port\\s+\\d+$'
+    datetime_format: '2006 Jan _2 15:04:05'
+    tokens:
+      datetime: 1
+      message: 2
+      address: 3
+  rules:
+    - name: 'auth-failure'
+      token: message
+      expression: 'Authentication (failure|error|failed) for .+'
+    - name: 'user-enumeration'
+      token: message
+      expression: '(Illegal|Invalid) user .+'
+"""
+
+# epoch 0: 3 events over two dates, 1 quarantined, 1 without a rule hit
+CHUNK_0 = [
+    "Aug 13 06:15:01 host1 sshd[1234]: Authentication failed for invalid user admin from 203.0.113.7 port 22",
+    "Aug 14 07:00:00 host1 sshd[2001]: Invalid user test from 203.0.113.7 port 22",
+    "Aug 13 06:15:03 host1 sshd[1235]: Invalid user oracle from 198.51.100.23 port 22",
+    "Xxx 99 99:99:99 host1 sshd[3001]: Invalid user broken from 9.9.9.9 port 22",
+    "Aug 13 06:15:07 host1 sshd[1237]: Accepted password for root from 10.0.0.1 port 22",
+]
+# epoch 1: 2 events (one into a date epoch 0 also wrote), 1 quarantined
+CHUNK_1 = [
+    "Aug 15 08:00:00 host1 sshd[4001]: Invalid user guest from 192.0.2.5 port 22",
+    "Aug 13 09:00:00 host1 sshd[4002]: Authentication failure for root from 192.0.2.5 port 22",
+    "Yyy 99 99:99:99 host1 sshd[4003]: Invalid user broken from 9.9.9.9 port 22",
+]
+
+BATCH_SCHEMA = "created_at timestamp, address string, _parse_error boolean"
+
+
+class InjectedFault(RuntimeError):
+    pass
+
+
+def _failing_once(factory, *, before: bool):
+    """Wrap a sink/hook factory so the first call of what it builds
+    raises, before or after the real call."""
+    fired = []
+
+    def fire() -> None:
+        if not fired:
+            fired.append(True)
+            raise InjectedFault("injected fault")
+
+    def make(*args, **kwargs):
+        inner = factory(*args, **kwargs)
+
+        def run(batch, epoch_id: int) -> None:
+            if before:
+                fire()
+            inner(batch, epoch_id)
+            if not before:
+                fire()
+
+        return run
+
+    return make
+
+
+#: (module, attribute, raise before the real call?)
+FAULTS = {
+    # after the parquet publish, before the DuckDB transaction
+    "before_db_sink": (db, "duckdb_exactly_once_sink", True),
+    # after the DuckDB commit
+    "after_db_commit": (db, "duckdb_exactly_once_sink", False),
+    # after the report CSV, before the checkpoint commit
+    "in_report_hook": (cli, "_report_hook", False),
+}
+
+
+def _count(pattern: str) -> int:
+    if not glob.glob(pattern):
+        return 0
+    sql = f"SELECT count(*) FROM read_parquet('{pattern}')"
+    return duckdb.sql(sql).fetchone()[0]
+
+
+def _staged(events: str) -> list[str]:
+    return glob.glob(os.path.join(events, "_staging", "epoch=*"))
+
+
+@pytest.mark.parametrize("point", sorted(FAULTS))
+def test_rerun_after_fault_is_exactly_once(spark, tmp_path, point, monkeypatch):
+    ssh = tmp_path / "ssh"
+    ssh.mkdir()
+    cfg = tmp_path / "takuan.yml"
+    cfg.write_text(CONFIG_TMPL.format(ssh_dir=ssh))
+    out = str(tmp_path / "out")
+    dbf = str(tmp_path / "events.duckdb")
+    argv = ["--config", str(cfg), "--out", out, "--db", dbf, "--batch"]
+
+    (ssh / "chunk-0.log").write_text("\n".join(CHUNK_0) + "\n")
+    assert cli.main(argv) == 0  # epoch 0 lands cleanly
+    (ssh / "chunk-1.log").write_text("\n".join(CHUNK_1) + "\n")
+    module, attr, before = FAULTS[point]
+    with monkeypatch.context() as m:
+        m.setattr(module, attr, _failing_once(getattr(module, attr), before=before))
+        with pytest.raises(Exception, match="injected fault"):
+            cli.main(argv)  # epoch 1 fails before the checkpoint commit
+    assert cli.main(argv) == 0  # epoch 1 is replayed
+
+    assert _count(f"{out}/events/*/*.parquet") == 5
+    assert _count(f"{out}/quarantine/*.parquet") == 2
+    con = duckdb.connect(dbf, read_only=True)
+    try:
+        assert con.execute("SELECT count(*) FROM events").fetchone()[0] == 5
+    finally:
+        con.close()
+    reports = sorted(os.path.basename(p) for p in glob.glob(f"{out}/reports/*"))
+    assert reports == ["address_report_000000.csv", "address_report_000001.csv"]
+    assert _staged(f"{out}/events") == []
+
+
+def _batch(spark, good: int, bad: int):
+    day = dt.datetime(2026, 8, 13)
+    rows = [(day + dt.timedelta(days=i % 2), f"10.0.0.{i}", False)
+            for i in range(good)]
+    rows += [(None, f"10.0.1.{i}", True) for i in range(bad)]
+    return spark.createDataFrame(rows, BATCH_SCHEMA)
+
+
+def test_split_sink_replay_writes_once(spark, tmp_path):
+    """The same (batch, epoch) delivered twice, as after a crash between
+    the sink and the checkpoint commit, lands once; the next epoch adds
+    its own files beside it."""
+    events, quarantine = str(tmp_path / "events"), str(tmp_path / "quarantine")
+    sink = split_sink(events, quarantine)
+    batch = _batch(spark, good=3, bad=2)
+    sink(batch, 3)
+    sink(batch, 3)  # replay
+    assert _count(f"{events}/*/*.parquet") == 3
+    assert _count(f"{quarantine}/*.parquet") == 2
+    sink(batch, 4)  # a genuinely new epoch
+    assert _count(f"{events}/*/*.parquet") == 6
+    assert _count(f"{quarantine}/*.parquet") == 4
+    names = {os.path.basename(p) for p in glob.glob(f"{events}/*/*.parquet")}
+    assert {n.split("-", 2)[1] for n in names} == {"3", "4"}
+    assert _staged(events) == []
+    assert not os.path.exists(os.path.join(events, "_staging"))
+
+
+def test_split_sink_all_quarantine_replay(spark, tmp_path):
+    """An epoch with only parse errors fills quarantine alone, once, and
+    hands the hook an empty batch."""
+    events, quarantine = str(tmp_path / "events"), str(tmp_path / "quarantine")
+    seen = []
+    sink = split_sink(events, quarantine,
+                      post_hook=lambda df, epoch: seen.append((epoch, df.count())))
+    batch = _batch(spark, good=0, bad=3)
+    sink(batch, 0)
+    sink(batch, 0)  # replay
+    assert _count(f"{quarantine}/*.parquet") == 3
+    assert _count(f"{events}/*/*.parquet") == 0
+    assert seen == [(0, 0), (0, 0)]
+    assert _staged(events) == []
+
+
+def test_split_sink_survives_empty_epoch(spark, tmp_path):
+    """An empty micro-batch stages no files; publishing it is a no-op
+    that leaves no stage behind, and the epochs after it land once."""
+    events, quarantine = str(tmp_path / "events"), str(tmp_path / "quarantine")
+    sink = split_sink(events, quarantine)
+    empty = _batch(spark, good=0, bad=0)
+    sink(empty, 0)
+    sink(empty, 0)  # replay of the empty epoch
+    assert _staged(events) == []
+    full = _batch(spark, good=2, bad=1)
+    sink(full, 1)
+    sink(full, 1)  # replay
+    assert _count(f"{events}/*/*.parquet") == 2
+    assert _count(f"{quarantine}/*.parquet") == 1
+    assert _staged(events) == []
