@@ -12,7 +12,9 @@ Modes:
   seconds, exactly the reference's DB ticker) and run until interrupted.
 - ``--batch``: drain whatever input is currently in the sensor
   directories with ``trigger(availableNow)``, write events + reports,
-  exit. This is the catch-up / cron-shaped run.
+  exit. This is the catch-up / cron-shaped run; a backlog larger than
+  ``streaming.pipeline.MAX_EPOCH_BYTES`` per sensor drains as several
+  epochs, each with its own report.
 - ``--geo``: one-shot geo re-enrichment batch job over the existing
   events table (O28, ref: core/aggregator.go:177-203) using
   ``--geo-dim``, then exit.
@@ -46,32 +48,44 @@ def _load_geo_dim(spark: SparkSession, path: str):
 def _report_hook(out_dir: str, webhook_url: str | None = None):
     """Per-flush report job: address report CSV, country top-k and the
     formatted summary on stdout (and POSTed to ``webhook_url`` if set).
-    Pure set-oriented queries over the just-flushed batch — the
-    hourly-report semantics of the reference, triggered per flush here
-    (period scheduling belongs to the caller's cron; the engine-side
-    contract is 'a report per delivered batch').
+    One Spark query per epoch: the epoch's ``partial_report`` as
+    ``report_segments`` (one row per attack key), collected through
+    Arrow and folded on the driver by ``fold_partial`` into the rows
+    ``address_report``, ``country_topk`` and ``count()`` give over the
+    same batch. The reference's report is hourly; here it runs once per
+    flushed epoch, and ``reports.period`` is ignored (period scheduling
+    belongs to the caller's cron; the engine-side contract is 'a report
+    per delivered batch'). The CSV is named by epoch, so a replayed
+    epoch rewrites its own file.
+
+    The driver holds the epoch's partial, one Arrow row per distinct
+    attack key, and the fold's working set, a few hundred bytes per key
+    at its peak. A catch-up run reads at most
+    ``streaming.pipeline.MAX_EPOCH_BYTES`` per sensor directory per
+    epoch, so a backlog is folded one bounded epoch at a time.
 
     A webhook that cannot be reached is logged to stderr and skipped: by
     then the CSV and the summary are written, and raising would fail the
     streaming query and replay the epoch."""
     from takuan_spark.operators.reports import (
-        address_report,
-        country_topk,
+        fold_partial,
         format_country_summary,
+        partial_report,
+        report_segments,
     )
     from takuan_spark.sinks.publish import webhook_publisher
-    from takuan_spark.sinks.writers import write_csv_report
+    from takuan_spark.sinks.writers import write_csv_table
 
     send = webhook_publisher(webhook_url) if webhook_url else None
 
     def hook(batch, epoch_id: int) -> None:
-        total = batch.count()
+        partial = report_segments(partial_report(batch)).toArrow()
+        report, countries = fold_partial(partial)
+        total = sum(r.total_events for r in countries)
         if not total:
             return
-        report = address_report(batch)
-        write_csv_report(report, f"{out_dir}/address_report_{epoch_id:06d}.csv")
-        topk = country_topk(batch).collect()
-        status = format_country_summary(topk, total)
+        write_csv_table(report, f"{out_dir}/address_report_{epoch_id:06d}.csv")
+        status = format_country_summary(countries[:5], total)
         print(status, flush=True)
         if send:  # the reference's tweet (twitter.go:82-99), generalized
             try:

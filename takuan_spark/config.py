@@ -185,7 +185,6 @@ class SensorSpec:
     parser: ParserSpec
     rules: list[RuleSpec] = field(default_factory=list)
     enabled: bool = True
-    period_secs: int = 10
 
     def validate(self) -> None:
         if not self.enabled:
@@ -214,7 +213,6 @@ class PipelineConfig:
     node_name: str
     sensors: list[SensorSpec] = field(default_factory=list)
     flush_period_secs: int = 10
-    report_period_secs: int = 3600
     year: int = 2026
 
     def validate(self) -> None:
@@ -272,14 +270,12 @@ def config_from_dict(raw: dict, *, year: int = 2026) -> PipelineConfig:
                 parser=parser,
                 rules=rules,
                 enabled=s.get("enabled", True),
-                period_secs=s.get("period", 10),
             )
         )
     conf = PipelineConfig(
         node_name=raw.get("name", "local"),
         sensors=sensors,
         flush_period_secs=raw.get("database", {}).get("period", 10),
-        report_period_secs=raw.get("reports", {}).get("period", 3600),
         year=year,
     )
     conf.validate()

@@ -15,36 +15,58 @@ semantics as *sorted* segments (`sort_array` before `concat_ws`), and all
 orderings get stable tiebreak keys — required for oracle hashing and the
 right call for any engine.
 
-Scale notes: every report is a two-level hash aggregation. The inner
-level groups by (address, sensor, rule, country) with partial (map-side)
-aggregation before its shuffle, so at 100 TB that shuffle carries one
-row per key, not one per event. The per-address level then shuffles
+Scale notes: every Spark-side report is a two-level hash aggregation.
+The inner level groups by (address, sensor, rule, country) with partial
+(map-side) aggregation before its shuffle, so at 100 TB that shuffle
+carries one row per key, not one per event. The per-address level then shuffles
 again on ``address`` (a second hash exchange: the inner exchange is
 partitioned on the whole key, not on its ``address`` prefix). No
 driver-side state; the only ``limit`` is the final top-k, which Spark
 plans as TakeOrderedAndProject (per-partition heap + merge).
 
 Counts are linear, so the per-address level does not care where its
-counts came from: :func:`report_from_counts` is the one per-address fold,
-fed by :func:`address_report` (a ``count()`` over events) and by
-``streaming.report_stream.merged_report`` (a ``sum`` over the per-epoch
-:func:`partial_report` rows).
+counts came from. Over stored history, :func:`report_from_counts` is the
+one Spark-side per-address fold, fed by :func:`address_report` (a
+``count()`` over events) and by ``streaming.report_stream.merged_report``
+(a ``sum`` over the per-epoch :func:`partial_report` rows). The service's
+per-epoch report instead collects one epoch's :func:`partial_report`,
+as :func:`report_segments`, through Arrow and folds it on the driver in
+Arrow's kernels with :func:`fold_partial`; the fold returns the same
+rows in the same order as :func:`address_report` and
+:func:`country_topk` would over that epoch. That partial holds one row
+per distinct attack key of the epoch; a catch-up run reads at most
+``streaming.pipeline.MAX_EPOCH_BYTES`` per sensor directory per epoch,
+which bounds it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 #: the inner grouping key of every report; country is constant per
 #: address (one geo row per IP), so carrying it through the key is free
 REPORT_KEYS = ("address", "sensor", "rule", "country_code", "country_name")
 
+#: the address report's columns, in the reference's CSV header order
+#: (core/reporter.go:136-144)
+REPORT_COLUMNS = ["address", "country_code", "country_name", "total_events", "counters"]
+
 
 def unreported(events: DataFrame) -> DataFrame:
     """The unreported slice: ``WHERE reported_at IS NULL`` (O16,
     ref: core/aggregator.go:94)."""
     return events.where(F.col("reported_at").isNull())
+
+
+def _segment(count_col: str):
+    """One counters segment, ``sensor/rule:count`` (NULL parts skipped,
+    as ``concat_ws`` skips them)."""
+    return F.concat_ws(
+        ":", F.concat_ws("/", "sensor", "rule"), F.col(count_col).cast("string")
+    )
 
 
 def report_from_counts(counts: DataFrame) -> DataFrame:
@@ -59,9 +81,7 @@ def report_from_counts(counts: DataFrame) -> DataFrame:
     reference's ``addrEvents[0]`` (core/reporter.go:165-166) since it is
     constant per address.
     """
-    segment = F.concat_ws(
-        ":", F.concat_ws("/", "sensor", "rule"), F.col("cnt").cast("string")
-    )
+    segment = _segment("cnt")
     aggs = [
         F.min("country_code").alias("country_code"),
         F.min("country_name").alias("country_name"),
@@ -101,6 +121,62 @@ def partial_report(batch: DataFrame) -> DataFrame:
     the (sensor, rule) grain so summing ``n`` across batches and folding
     with :func:`report_from_counts` rebuilds the counters string exactly."""
     return batch.groupBy(*REPORT_KEYS).agg(F.count("*").alias("n"))
+
+
+def report_segments(partial: DataFrame) -> DataFrame:
+    """:func:`partial_report` rows as ``address``, the country columns,
+    the key's ``sensor/rule:n`` counters ``segment`` (built as
+    :func:`report_from_counts` builds it) and ``n``: the input of
+    :func:`fold_partial`."""
+    return partial.select(
+        "address", "country_code", "country_name",
+        _segment("n").alias("segment"), "n",
+    )
+
+
+def fold_partial(partial: pa.Table) -> tuple[pa.Table, list[Row]]:
+    """Driver-side twin of :func:`address_report` and :func:`country_topk`
+    over one epoch's :func:`report_segments`, collected as an Arrow table.
+
+    Returns ``(report, countries)``: the address report as a
+    ``REPORT_COLUMNS`` table in :func:`report_from_counts`'s order
+    (total_events desc, then address asc, NULL first), and every
+    country's event count as rows in :func:`country_topk`'s order (count
+    desc, then code asc, NULL first), so ``countries[:k]`` is its top-k
+    and the counts sum to the epoch's total. All of it runs in Arrow's
+    kernels, whose string order is byte order, as Spark's is; segments
+    are sorted before grouping, and a single-threaded ``group_by`` keeps
+    that order in each address's list, as ``sort_array`` does.
+    """
+    per_addr = (
+        partial.sort_by([("address", "ascending"), ("segment", "ascending")],
+                        null_placement="at_start")
+        .group_by("address", use_threads=False)
+        .aggregate([("country_code", "min"), ("country_name", "min"),
+                    ("n", "sum"), ("segment", "list")])
+    )
+    report = pa.table([
+        per_addr["address"],
+        per_addr["country_code_min"],
+        per_addr["country_name_min"],
+        per_addr["n_sum"],
+        pc.binary_join(per_addr["segment_list"], "|"),
+    ], names=REPORT_COLUMNS).sort_by(
+        [("total_events", "descending"), ("address", "ascending")],
+        null_placement="at_start",
+    )
+    per_country = (
+        partial.group_by("country_code").aggregate([("n", "sum")])
+        .sort_by([("n_sum", "descending"), ("country_code", "ascending")],
+                 null_placement="at_start")
+    )
+    country_row = Row("country_code", "total_events")
+    countries = [
+        country_row(code, n)
+        for code, n in zip(per_country["country_code"].to_pylist(),
+                           per_country["n_sum"].to_pylist())
+    ]
+    return report, countries
 
 
 def country_topk(events: DataFrame, *, k: int = 5) -> DataFrame:

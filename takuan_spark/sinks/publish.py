@@ -37,8 +37,7 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame
 
-#: reporter.go:136-144 — exact header order.
-REPORT_COLUMNS = ["address", "country_code", "country_name", "total_events", "counters"]
+from takuan_spark.operators.reports import REPORT_COLUMNS
 
 _GIT_IDENT = ["-c", "user.name=takuan", "-c", "user.email=takuan@localhost"]
 

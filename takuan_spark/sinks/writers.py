@@ -18,9 +18,11 @@ epoch replaces its own files instead of adding a second copy.
 from __future__ import annotations
 
 import contextlib
+import csv
 import os
 import shutil
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -99,9 +101,34 @@ def _publish(src: str, dest: str, prefix: str) -> None:
 
 
 def write_csv_report(df: DataFrame, path: str) -> None:
-    """CSV report sink (O24, ref: core/reporter.go:124-173).
+    """CSV report sink (O24, ref: core/reporter.go:124-173) for a report
+    Spark computed, e.g. over the stored events history.
 
     ``coalesce(1)`` for the human-readable single-file report — report
-    outputs are top-k/aggregate sized, so this never bottlenecks.
+    outputs are top-k/aggregate sized, so this never bottlenecks. The
+    service's per-epoch report is folded on the driver and written by
+    :func:`write_csv_table` into the same layout instead.
     """
     df.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
+
+
+def write_csv_table(table: pa.Table, path: str) -> None:
+    """Write a driver-side Arrow table as the report directory
+    :func:`write_csv_report` makes: ``path/part-00000.csv`` with a header
+    row, NULL as an empty field, RFC 4180 quoting. Rows are converted a
+    batch at a time. The file is written under a hidden name, any other
+    ``part-*`` file in ``path`` (a Spark-named part from an earlier
+    build) is removed, and the file is renamed into place, so a reader
+    never sees a partial file and a rerun of the same report replaces
+    it."""
+    os.makedirs(path, exist_ok=True)
+    tmp = os.path.join(path, ".part-00000.csv.tmp")
+    with open(tmp, "w", newline="", encoding="utf-8") as fh:
+        writer = csv.writer(fh, lineterminator="\n")
+        writer.writerow(table.column_names)
+        for chunk in table.to_batches(max_chunksize=65536):
+            writer.writerows(zip(*(column.to_pylist() for column in chunk.columns)))
+    for name in os.listdir(path):
+        if name.startswith("part-") and name != "part-00000.csv":
+            os.remove(os.path.join(path, name))
+    os.replace(tmp, os.path.join(path, "part-00000.csv"))

@@ -46,6 +46,14 @@ from takuan_spark.operators.enrich import geo_enrich
 from takuan_spark.plans.compiler import EVENT_COLUMNS, compile_sensor
 from takuan_spark.sinks.writers import write_epoch
 
+#: input bytes one micro-batch takes from each sensor's chunk directory.
+#: A catch-up run (``--batch``, or a service started on a backlog) then
+#: drains the backlog as several epochs instead of one, which bounds what
+#: the driver collects per epoch: the DuckDB sink's event rows and the
+#: report hook's partial. The file source takes at least one whole file
+#: per epoch, so one file larger than this is still read in one epoch.
+MAX_EPOCH_BYTES = 64 * 1024 * 1024
+
 
 def compile_stream(
     spark: SparkSession,
@@ -60,7 +68,8 @@ def compile_stream(
 
     ``tail_files=False`` (default): each sensor path is a chunk
     DIRECTORY consumed by the built-in file source — the scale path
-    (parallel scans, many files). ``tail_files=True``: each path is ONE
+    (parallel scans, many files), at most ``MAX_EPOCH_BYTES`` of it per
+    micro-batch. ``tail_files=True``: each path is ONE
     live log file consumed by the byte-offset ``filetail`` source
     (``sources/tail_source.py``) — the reference sensor's exact
     single-file semantics including truncation reset (O1/O2/O3).
@@ -80,7 +89,9 @@ def compile_stream(
                 .select("value")
             )
         else:
-            lines = spark.readStream.text(path)
+            lines = spark.readStream.option(
+                "maxBytesPerTrigger", str(MAX_EPOCH_BYTES)
+            ).text(path)
         parts.append(
             compile_sensor(
                 lines,

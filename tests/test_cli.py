@@ -11,6 +11,7 @@ import glob
 import pandas as pd
 import pytest
 
+import takuan_spark.streaming.pipeline as pipeline
 from takuan_spark.__main__ import main
 
 CONFIG_TMPL = """
@@ -71,7 +72,7 @@ def test_cli_batch_mode_end_to_end(spark, cli_env, capsys):
     }
     assert events.count() == 3
 
-    # write_csv_report writes a directory (Spark CSV sink) with one part
+    # the report is a directory holding one part file, as Spark's CSV sink writes it
     parts = glob.glob(f"{cli_env['out']}/reports/address_report_*.csv/part-*.csv")
     assert parts, "report CSV not written"
     rep = pd.read_csv(parts[0])
@@ -127,6 +128,64 @@ def test_cli_batch_mode_with_jdbc_sink(spark, cli_env, capsys):
     # rerun with the same checkpoint: no new batches, no duplicate rows
     assert main(argv) == 0
     assert count() == 3
+
+
+def test_cli_one_epoch_drain_job_count(spark, cli_env, monkeypatch, capsys):
+    """A one-epoch ``--batch`` drain with a DuckDB sink and a geo dim runs
+    at most 5 Spark jobs in its query's job group (the query's run id):
+    the geo broadcast, the staged write, the DuckDB Arrow collect and the
+    report hook's two."""
+    geo_csv = cli_env["tmp"] / "geo.csv"
+    geo_csv.write_text("ip,country_code,country_name\n203.0.113.7,CN,China\n")
+    queries = []
+    start = pipeline.start_pipeline
+
+    def keep(*args, **kwargs):
+        queries.append(start(*args, **kwargs))
+        return queries[-1]
+
+    monkeypatch.setattr(pipeline, "start_pipeline", keep)
+    rc = main(
+        [
+            "--config", cli_env["cfg"],
+            "--out", cli_env["out"],
+            "--batch",
+            "--db", str(cli_env["tmp"] / "events.duckdb"),
+            "--geo-dim", str(geo_csv),
+        ]
+    )
+    assert rc == 0
+    assert capsys.readouterr().out.startswith("3 events: 2 from")
+    (query,) = queries
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(query.runId))
+    assert 0 < len(jobs) <= 5
+
+
+def test_cli_batch_drain_is_bounded_per_epoch(spark, cli_env, monkeypatch, capsys):
+    """A ``--batch`` drain of a backlog larger than ``MAX_EPOCH_BYTES``
+    runs as several epochs (at least one file each), and every output
+    still holds each event once: one report and one summary per epoch."""
+    import duckdb
+
+    ssh = cli_env["tmp"] / "ssh-chunks"
+    for i in (2, 3):
+        (ssh / f"auth.log.{i}").write_text("\n".join(AUTH_LINES) + "\n")
+    monkeypatch.setattr(pipeline, "MAX_EPOCH_BYTES", 1)
+    db = str(cli_env["tmp"] / "events.duckdb")
+    rc = main(
+        ["--config", cli_env["cfg"], "--out", cli_env["out"], "--batch", "--db", db]
+    )
+    assert rc == 0
+    assert capsys.readouterr().out.splitlines() == [
+        "3 events: 3 from \U0001F3F3 unknown..."] * 3
+    assert spark.read.parquet(f"{cli_env['out']}/events").count() == 9
+    con = duckdb.connect(db)
+    assert con.sql("SELECT COUNT(*) FROM events").fetchone()[0] == 9
+    con.close()
+    reports = sorted(glob.glob(f"{cli_env['out']}/reports/address_report_*.csv"))
+    assert [r[-10:] for r in reports] == ["000000.csv", "000001.csv", "000002.csv"]
+    totals = [pd.read_csv(f"{r}/part-00000.csv")["total_events"].sum() for r in reports]
+    assert totals == [3, 3, 3]
 
 
 def test_cli_geo_batch_mode(spark, cli_env, capsys):

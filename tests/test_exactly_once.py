@@ -2,8 +2,8 @@
 (O15/O17/O29): the service is made to fail once at a point inside
 ``foreachBatch``, rerun on the same checkpoint, and its events,
 quarantine, DuckDB and report outputs must hold each epoch once. The
-faults patch module attributes in place, so ``main`` wires the service
-it always wires."""
+faults patch module attributes (or ``os.rename``/``os.replace``) in
+place, so ``main`` wires the service it always wires."""
 
 from __future__ import annotations
 
@@ -92,14 +92,63 @@ def _failing_once(factory, *, before: bool):
     return make
 
 
-#: (module, attribute, raise before the real call?)
+def _fail_factory(module, attr: str, *, before: bool):
+    """Fault installer: the first sink or hook ``module.attr`` builds
+    raises once, before or after its real call."""
+
+    def install(m) -> None:
+        m.setattr(module, attr, _failing_once(getattr(module, attr), before=before))
+
+    return install
+
+
+def _fail_os(name: str, hit, *, nth: int = 1):
+    """Fault installer: ``os.<name>(src, dst)`` raises instead of acting on
+    the ``nth`` call for which ``hit(dst)`` holds."""
+
+    def install(m) -> None:
+        real, hits = getattr(os, name), []
+
+        def patched(src, dst, *args, **kwargs):
+            if hit(dst):
+                hits.append(dst)
+                if len(hits) == nth:
+                    raise InjectedFault("injected fault")
+            return real(src, dst, *args, **kwargs)
+
+        m.setattr(os, name, patched)
+
+    return install
+
+
+#: where epoch 1 fails; each entry installs its fault on a monkeypatch
 FAULTS = {
     # after the parquet publish, before the DuckDB transaction
-    "before_db_sink": (db, "duckdb_exactly_once_sink", True),
+    "before_db_sink": _fail_factory(db, "duckdb_exactly_once_sink", before=True),
     # after the DuckDB commit
-    "after_db_commit": (db, "duckdb_exactly_once_sink", False),
+    "after_db_commit": _fail_factory(db, "duckdb_exactly_once_sink", before=False),
     # after the report CSV, before the checkpoint commit
-    "in_report_hook": (cli, "_report_hook", False),
+    "in_report_hook": _fail_factory(cli, "_report_hook", before=False),
+    # the report CSV is written but not yet renamed into place
+    "report_csv_rename": _fail_os(
+        "replace", lambda dst: "address_report_000001" in dst),
+    # epoch 1 spans two event dates and the quarantine: one of its staged
+    # files is published, the rest are not
+    "between_publish_renames": _fail_os(
+        "rename", lambda dst: os.path.basename(dst).startswith("epoch-1-"), nth=2),
+}
+
+#: the per-epoch address report CSVs: no country without a geo dim
+REPORT_ROWS = {
+    "address_report_000000.csv": [
+        "address,country_code,country_name,total_events,counters",
+        "203.0.113.7,,,2,ssh/auth-failure:1|ssh/user-enumeration:1",
+        "198.51.100.23,,,1,ssh/user-enumeration:1",
+    ],
+    "address_report_000001.csv": [
+        "address,country_code,country_name,total_events,counters",
+        "192.0.2.5,,,2,ssh/auth-failure:1|ssh/user-enumeration:1",
+    ],
 }
 
 
@@ -127,9 +176,8 @@ def test_rerun_after_fault_is_exactly_once(spark, tmp_path, point, monkeypatch):
     (ssh / "chunk-0.log").write_text("\n".join(CHUNK_0) + "\n")
     assert cli.main(argv) == 0  # epoch 0 lands cleanly
     (ssh / "chunk-1.log").write_text("\n".join(CHUNK_1) + "\n")
-    module, attr, before = FAULTS[point]
     with monkeypatch.context() as m:
-        m.setattr(module, attr, _failing_once(getattr(module, attr), before=before))
+        FAULTS[point](m)
         with pytest.raises(Exception, match="injected fault"):
             cli.main(argv)  # epoch 1 fails before the checkpoint commit
     assert cli.main(argv) == 0  # epoch 1 is replayed
@@ -141,8 +189,13 @@ def test_rerun_after_fault_is_exactly_once(spark, tmp_path, point, monkeypatch):
         assert con.execute("SELECT count(*) FROM events").fetchone()[0] == 5
     finally:
         con.close()
-    reports = sorted(os.path.basename(p) for p in glob.glob(f"{out}/reports/*"))
-    assert reports == ["address_report_000000.csv", "address_report_000001.csv"]
+    reports = sorted(os.listdir(f"{out}/reports"))
+    assert reports == sorted(REPORT_ROWS)
+    for name, rows in REPORT_ROWS.items():
+        # one part file holding the epoch's rows, no temp file left over
+        assert os.listdir(f"{out}/reports/{name}") == ["part-00000.csv"]
+        with open(f"{out}/reports/{name}/part-00000.csv") as fh:
+            assert fh.read().splitlines() == rows
     assert _staged(f"{out}/events") == []
 
 
