@@ -48,39 +48,39 @@ def _load_geo_dim(spark: SparkSession, path: str):
 def _report_hook(out_dir: str, webhook_url: str | None = None):
     """Per-flush report job: address report CSV, country top-k and the
     formatted summary on stdout (and POSTed to ``webhook_url`` if set).
-    One Spark query per epoch: the epoch's ``partial_report`` as
-    ``report_segments`` (one row per attack key), collected through
-    Arrow and folded on the driver by ``fold_partial`` into the rows
+    The hook gets the epoch's good rows as the Arrow table
+    ``streaming.pipeline.split_sink`` collected, and runs no Spark job:
+    ``epoch_partial`` counts them per attack key with Arrow's
+    ``group_by`` and ``fold_partial`` folds that partial into the rows
     ``address_report``, ``country_topk`` and ``count()`` give over the
-    same batch. The reference's report is hourly; here it runs once per
+    same rows. The reference's report is hourly; here it runs once per
     flushed epoch, and ``reports.period`` is ignored (period scheduling
     belongs to the caller's cron; the engine-side contract is 'a report
     per delivered batch'). The CSV is named by epoch, so a replayed
     epoch rewrites its own file.
 
-    The driver holds the epoch's partial, one Arrow row per distinct
-    attack key, and the fold's working set, a few hundred bytes per key
-    at its peak. A catch-up run reads at most
-    ``streaming.pipeline.MAX_EPOCH_BYTES`` per sensor directory per
-    epoch, so a backlog is folded one bounded epoch at a time.
+    Besides the epoch, which ``split_sink`` already holds, the driver
+    holds its partial, one Arrow row per distinct attack key, and the
+    fold's working set, a few hundred bytes per key at its peak. A
+    catch-up run reads at most ``streaming.pipeline.MAX_EPOCH_BYTES`` per
+    sensor directory per epoch, so a backlog is folded one bounded epoch
+    at a time.
 
     A webhook that cannot be reached is logged to stderr and skipped: by
     then the CSV and the summary are written, and raising would fail the
     streaming query and replay the epoch."""
     from takuan_spark.operators.reports import (
+        epoch_partial,
         fold_partial,
         format_country_summary,
-        partial_report,
-        report_segments,
     )
     from takuan_spark.sinks.publish import webhook_publisher
     from takuan_spark.sinks.writers import write_csv_table
 
     send = webhook_publisher(webhook_url) if webhook_url else None
 
-    def hook(batch, epoch_id: int) -> None:
-        partial = report_segments(partial_report(batch)).toArrow()
-        report, countries = fold_partial(partial)
+    def hook(events, epoch_id: int) -> None:
+        report, countries = fold_partial(epoch_partial(events))
         total = sum(r.total_events for r in countries)
         if not total:
             return
@@ -349,19 +349,20 @@ def main(argv: list[str] | None = None) -> int:
     if args.jdbc_url:
         from takuan_spark.sinks.jdbc import DERBY_DRIVER, jdbc_exactly_once_sink
 
+        jdbc_sink = jdbc_exactly_once_sink(
+            args.jdbc_url, "events", driver=args.jdbc_driver or DERBY_DRIVER,
+        )
+        # a Spark-writer sink: it gets the epoch back as a DataFrame
         db_sinks.append(
-            jdbc_exactly_once_sink(
-                args.jdbc_url, "events",
-                driver=args.jdbc_driver or DERBY_DRIVER,
-            )
+            lambda events, epoch_id: jdbc_sink(spark.createDataFrame(events), epoch_id)
         )
 
     if db_sinks:
 
-        def hook(batch, epoch_id: int) -> None:
+        def hook(events, epoch_id: int) -> None:
             for sink in db_sinks:
-                sink(batch, epoch_id)
-            report_hook(batch, epoch_id)
+                sink(events, epoch_id)
+            report_hook(events, epoch_id)
 
     else:
         hook = report_hook

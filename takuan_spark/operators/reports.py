@@ -29,14 +29,15 @@ counts came from. Over stored history, :func:`report_from_counts` is the
 one Spark-side per-address fold, fed by :func:`address_report` (a
 ``count()`` over events) and by ``streaming.report_stream.merged_report``
 (a ``sum`` over the per-epoch :func:`partial_report` rows). The service's
-per-epoch report instead collects one epoch's :func:`partial_report`,
-as :func:`report_segments`, through Arrow and folds it on the driver in
-Arrow's kernels with :func:`fold_partial`; the fold returns the same
-rows in the same order as :func:`address_report` and
-:func:`country_topk` would over that epoch. That partial holds one row
-per distinct attack key of the epoch; a catch-up run reads at most
-``streaming.pipeline.MAX_EPOCH_BYTES`` per sensor directory per epoch,
-which bounds it.
+per-epoch report runs no Spark job: it takes the epoch's events as the
+Arrow table ``streaming.pipeline.split_sink`` collected for every sink,
+builds the same per-key partial there with :func:`epoch_partial`, and
+folds it in Arrow's kernels with :func:`fold_partial`; the fold returns
+the same rows in the same order as :func:`address_report` and
+:func:`country_topk` would over that epoch. The driver holds the epoch
+and its partial, one row per distinct attack key of the epoch; a
+catch-up run reads at most ``streaming.pipeline.MAX_EPOCH_BYTES`` per
+sensor directory per epoch, which bounds both.
 """
 
 from __future__ import annotations
@@ -123,20 +124,30 @@ def partial_report(batch: DataFrame) -> DataFrame:
     return batch.groupBy(*REPORT_KEYS).agg(F.count("*").alias("n"))
 
 
-def report_segments(partial: DataFrame) -> DataFrame:
-    """:func:`partial_report` rows as ``address``, the country columns,
-    the key's ``sensor/rule:n`` counters ``segment`` (built as
-    :func:`report_from_counts` builds it) and ``n``: the input of
-    :func:`fold_partial`."""
-    return partial.select(
-        "address", "country_code", "country_name",
-        _segment("n").alias("segment"), "n",
-    )
+def epoch_partial(events: pa.Table) -> pa.Table:
+    """Driver-side twin of :func:`partial_report` over an epoch's events
+    held as an Arrow table: one row per ``REPORT_KEYS`` key with
+    ``address``, the country columns, the key's ``sensor/rule:n``
+    counters ``segment`` and its count ``n``, the input of
+    :func:`fold_partial`. The segment is built as :func:`_segment` builds
+    it: a NULL sensor or rule is skipped, as ``concat_ws`` skips it."""
+    counts = events.group_by(list(REPORT_KEYS)).aggregate([([], "count_all")])
+    sensor, rule, n = counts["sensor"], counts["rule"], counts["count_all"]
+    # not null_handling="skip": pyarrow 16 drops rows whose inputs are
+    # all NULL from its output instead of returning ""
+    pair = pc.coalesce(pc.binary_join_element_wise(sensor, rule, "/"), sensor, rule, "")
+    return pa.table({
+        "address": counts["address"],
+        "country_code": counts["country_code"],
+        "country_name": counts["country_name"],
+        "segment": pc.binary_join_element_wise(pair, pc.cast(n, pa.string()), ":"),
+        "n": n,
+    })
 
 
 def fold_partial(partial: pa.Table) -> tuple[pa.Table, list[Row]]:
     """Driver-side twin of :func:`address_report` and :func:`country_topk`
-    over one epoch's :func:`report_segments`, collected as an Arrow table.
+    over one epoch's :func:`epoch_partial`.
 
     Returns ``(report, countries)``: the address report as a
     ``REPORT_COLUMNS`` table in :func:`report_from_counts`'s order

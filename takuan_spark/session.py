@@ -118,10 +118,14 @@ def get_spark(
     # to the final location at task commit — one rename per file, no
     # O(files) job-commit phase. The trade (documented upstream in
     # MAPREDUCE-6336/SPARK-20107): a job that FAILS mid-commit can leave
-    # partial files behind. The service's events and quarantine writes
-    # land in ``_staging/epoch=<N>/`` first, so partial files can only
-    # sit there, and the replay of epoch N overwrites that stage
-    # (sinks/writers.py:write_epoch). On real deployments writing to
+    # partial files behind. The service's per-epoch events, quarantine
+    # and report files do not go through a Spark writer (they are
+    # written from the driver and renamed into place, see
+    # sinks/writers.py:write_epoch), so v2 serves the Spark writes left:
+    # the ``--geo`` re-enrich, whose partial output can only sit in its
+    # ``__geo_tmp`` directory until the swap, and the Spark report
+    # writers (sinks/writers.py:write_csv_report,
+    # sinks/publish.py:drop_report_csv). On real deployments writing to
     # object storage this knob is superseded by cloud-native committers
     # (magic/staging), which make the same one-move trade safely.
     # _SUCCESS markers are also skipped: nothing in the engine or its

@@ -10,30 +10,33 @@ replayed with the same ``epoch_id``), so a sink that records delivered
 exactly-once end-to-end — the reference's ``reported_at`` protocol as a
 two-line transactional guard.
 
-The batch crosses the driver as Arrow (``batch.toArrow()``), which keeps
-Spark's column types, so the table a first epoch creates is typed even
-when that epoch is empty or a column is all null; the data volume a
-driver can funnel is the ceiling. The events and quarantine parquet are
-made exactly-once by epoch-named files instead
+The sink takes the epoch as the Arrow table ``streaming/pipeline.py:
+split_sink`` collected once for every output, and DuckDB scans it in
+place. The table keeps Spark's column types, so the table a first epoch
+creates is typed even when that epoch is empty or a column is all null;
+the data volume a driver can funnel is the ceiling, and
+``pipeline.MAX_EPOCH_BYTES`` bounds it per epoch. The events and
+quarantine parquet are made exactly-once by epoch-named files instead
 (``sinks/writers.py:write_epoch``); the same guard over real JDBC
 (staging table + transactional promote, tested against embedded Derby)
-is ``sinks/jdbc.py:jdbc_exactly_once_sink``.
+is ``sinks/jdbc.py:jdbc_exactly_once_sink``, a Spark-writer sink that
+the service hands a DataFrame made from the same table.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
 
 EPOCH_TABLE = "_sink_epochs"
 
 
 def duckdb_exactly_once_sink(
     db_path: str, table: str
-) -> Callable[[DataFrame, int], None]:
-    """``foreachBatch`` sink: append the batch into DuckDB table
-    ``table`` exactly once per epoch.
+) -> Callable[[pa.Table, int], None]:
+    """Epoch sink: append the epoch's rows, an Arrow table, into DuckDB
+    table ``table`` exactly once per epoch.
 
     The epoch guard and the data insert commit in ONE transaction: a
     replayed epoch (crash between sink and checkpoint commit) sees its
@@ -43,7 +46,7 @@ def duckdb_exactly_once_sink(
     core/aggregator.go:165-169).
     """
 
-    def _sink(batch: DataFrame, epoch_id: int) -> None:
+    def _sink(batch: pa.Table, epoch_id: int) -> None:
         import duckdb
 
         con = duckdb.connect(db_path)
@@ -60,9 +63,7 @@ def duckdb_exactly_once_sink(
             if seen:
                 con.execute("ROLLBACK")
                 return
-            # materialize AFTER the guard: a replayed epoch must not pay
-            # the full batch recompute + Arrow transfer it then discards
-            con.register("_batch_df", batch.toArrow())
+            con.register("_batch_df", batch)
             con.execute(
                 f"CREATE TABLE IF NOT EXISTS {table} AS "
                 "SELECT * FROM _batch_df WHERE 1 = 0"

@@ -15,7 +15,8 @@ aggregated report:
 
 - :func:`drop_report_csv` — the reference's CSV shape and filename
   (``report_<timestamp>.csv``, same 5-column header,
-  reporter.go:136-144) written atomically (tmp + rename).
+  reporter.go:136-144) written atomically (tmp + rename), in the RFC
+  4180 dialect every report CSV uses (``sinks/writers.py:CSV_OPTIONS``).
 - :func:`git_publish` — add/commit (optionally push) the dropped file
   with the reference's commit message
   (``"reporting N addresses, M total events"``, reporter.go:182).
@@ -38,6 +39,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame
 
 from takuan_spark.operators.reports import REPORT_COLUMNS
+from takuan_spark.sinks.writers import CSV_OPTIONS
 
 _GIT_IDENT = ["-c", "user.name=takuan", "-c", "user.email=takuan@localhost"]
 
@@ -69,8 +71,7 @@ def drop_report_csv(
         report.select(*REPORT_COLUMNS)
         .coalesce(1)
         .write.mode("overwrite")
-        .option("header", True)
-        .option("emptyValue", "")
+        .options(**CSV_OPTIONS)
         .csv(staging)
     )
     part = next(

@@ -4,27 +4,43 @@ The reference buffers events and flushes them with per-row INSERTs into
 MySQL every N seconds (ref: core/aggregator.go:43-88, 219-225 — the
 author's own comment marks per-row work "SLOW"). The Spark-native sink is
 set-oriented: the micro-batch *is* the buffer (trigger interval = the
-flush period) and each batch lands as one partitioned write.
+flush period) and each batch lands as one write per destination.
 
 Events are partitioned by date at rest: at 100 TB the events table must
 be partition-prunable by time, since every report query reads a bounded
 recent slice.
 
-The service writes each micro-batch with :func:`write_epoch`: one staged
-write, then a publish that names every file by its epoch, so a replayed
-epoch replaces its own files instead of adding a second copy.
+The service collects each micro-batch once as Arrow and writes it with
+:func:`write_epoch`: one parquet file per destination directory, named
+by its epoch, so a replayed epoch replaces its own files instead of
+adding a second copy. :func:`write_events` is the Spark-side append the
+same table layout came from; reports Spark computes over stored history
+go through :func:`write_csv_report`.
 """
 
 from __future__ import annotations
 
-import contextlib
 import csv
 import os
-import shutil
 
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+#: Spark's CSV writer options for RFC 4180 output, the dialect
+#: :func:`write_csv_table` writes: quotes doubled, not backslash-escaped;
+#: values not whitespace-trimmed; an empty string (like NULL) written as
+#: an empty field
+CSV_OPTIONS = {
+    "header": True,
+    "escape": '"',
+    "ignoreLeadingWhiteSpace": False,
+    "ignoreTrailingWhiteSpace": False,
+    "emptyValue": "",
+}
+
 
 def write_events(df: DataFrame, path: str) -> None:
     """Append an events batch to the parquet events table, partitioned by
@@ -40,21 +56,21 @@ def write_events(df: DataFrame, path: str) -> None:
 
 
 def write_epoch(
-    batch: DataFrame, events_path: str, quarantine_path: str, epoch_id: int
+    table: pa.Table, events_path: str, quarantine_path: str, epoch_id: int
 ) -> None:
-    """Write one micro-batch (event columns plus ``_parse_error``) exactly
-    once per epoch: good rows into ``events_path/event_date=<d>/``, parse
-    errors flat into ``quarantine_path/`` (O29).
+    """Write one micro-batch, collected as Arrow (the event columns,
+    ``_parse_error`` and ``event_date``), exactly once per epoch: good
+    rows into ``events_path/event_date=<d>/``, parse errors flat into
+    ``quarantine_path/`` (O29), the layout :func:`write_events` makes.
 
-    One write job overwrites ``events_path/_staging/epoch=<N>/``,
-    partitioned by ``_parse_error`` and ``event_date`` (null for every
-    quarantined row, so the quarantine stages into one directory). The
-    publish then visits each destination directory the stage fills,
-    deletes the ``epoch-<N>-*`` files an earlier attempt left there and
-    renames the staged files in under that prefix; last it removes the
-    stage. Structured Streaming replays an uncommitted epoch under the
-    same id with the same rows, so a replay, or a crash anywhere in this
-    function, ends with exactly one copy of the epoch in both tables.
+    Each destination directory gets one file, ``epoch-<N>-0.parquet``,
+    holding the event columns. It is written under a hidden name that
+    Spark and ``*.parquet`` globs skip; then any other ``epoch-<N>-*``
+    file there (an earlier build's ``epoch-<N>-part-*``) is removed and
+    the file is renamed into place. Structured Streaming replays an
+    uncommitted epoch under the same id with the same rows, so a replay,
+    or a crash anywhere in this function, ends with exactly one copy of
+    the epoch in both tables. An empty epoch writes nothing.
 
     Limits: epoch ids belong to one checkpoint (delete the checkpoint,
     delete the outputs too); ``--geo`` renames the whole table to
@@ -62,42 +78,33 @@ def write_epoch(
     ``--geo`` run can duplicate it. The publish is local-filesystem
     renames, which is where the service writes.
     """
-    # the leading underscore keeps the stage out of every read of the table
-    stage = os.path.join(events_path, "_staging", f"epoch={epoch_id}")
-    good = ~F.col("_parse_error")
-    (
-        batch.withColumn("event_date", F.when(good, F.to_date("created_at")))
-        .write.mode("overwrite")
-        .partitionBy("_parse_error", "event_date")
-        .parquet(stage)
+    errors = table["_parse_error"]
+    good = pc.invert(errors)
+    rows = table.drop_columns(["_parse_error", "event_date"])
+    # Spark's partition directory names: ISO dates, NULL as the Hive default
+    dates = pc.fill_null(
+        pc.cast(table["event_date"], pa.string()), "__HIVE_DEFAULT_PARTITION__"
     )
-    prefix = f"epoch-{epoch_id}-"
-    for flag, dest in (("false", None), ("true", quarantine_path)):
-        root = os.path.join(stage, f"_parse_error={flag}")
-        for date_dir in _listdir(root):
-            _publish(
-                os.path.join(root, date_dir),
-                dest or os.path.join(events_path, date_dir),
-                prefix,
-            )
-    shutil.rmtree(stage)
-    with contextlib.suppress(OSError):  # not empty: another writer's stage
-        os.rmdir(os.path.dirname(stage))
+    for date in sorted(pc.unique(dates.filter(good)).to_pylist()):
+        _publish(
+            rows.filter(pc.and_(good, pc.equal(dates, date))),
+            os.path.join(events_path, f"event_date={date}"),
+            epoch_id,
+        )
+    if pc.any(errors).as_py():
+        _publish(rows.filter(errors), quarantine_path, epoch_id)
 
 
-def _listdir(path: str) -> list[str]:
-    return os.listdir(path) if os.path.isdir(path) else []
-
-
-def _publish(src: str, dest: str, prefix: str) -> None:
-    """Replace ``dest``'s ``prefix*`` files with the data files in ``src``."""
+def _publish(rows: pa.Table, dest: str, epoch_id: int) -> None:
+    """Make ``rows`` the one ``epoch-<epoch_id>-*`` file in ``dest``."""
+    name = f"epoch-{epoch_id}-0.parquet"
+    tmp = os.path.join(dest, f".{name}.tmp")
     os.makedirs(dest, exist_ok=True)
-    for name in _listdir(dest):
-        if name.startswith(prefix):
-            os.remove(os.path.join(dest, name))
-    for name in _listdir(src):
-        if not name.startswith((".", "_")):  # checksums, markers
-            os.rename(os.path.join(src, name), os.path.join(dest, prefix + name))
+    pq.write_table(rows, tmp)
+    for old in os.listdir(dest):
+        if old.startswith(f"epoch-{epoch_id}-") and old != name:
+            os.remove(os.path.join(dest, old))
+    os.replace(tmp, os.path.join(dest, name))
 
 
 def write_csv_report(df: DataFrame, path: str) -> None:
@@ -107,9 +114,10 @@ def write_csv_report(df: DataFrame, path: str) -> None:
     ``coalesce(1)`` for the human-readable single-file report — report
     outputs are top-k/aggregate sized, so this never bottlenecks. The
     service's per-epoch report is folded on the driver and written by
-    :func:`write_csv_table` into the same layout instead.
+    :func:`write_csv_table` into the same layout and dialect (RFC 4180,
+    ``CSV_OPTIONS``) instead.
     """
-    df.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
+    df.coalesce(1).write.mode("overwrite").options(**CSV_OPTIONS).csv(path)
 
 
 def write_csv_table(table: pa.Table, path: str) -> None:

@@ -9,8 +9,9 @@ The mapping, operator by operator:
   rotation (O2) is a non-event: a rotated file is a new file.
 - micro-batch buffer + periodic flush (O14, ref core/aggregator.go:43-88,
   219-225): ``trigger(processingTime=...)`` with the flush period.
-- row-at-a-time DB sink → one set-oriented ``foreachBatch`` write per
-  micro-batch (O15).
+- row-at-a-time DB sink → one set-oriented ``foreachBatch`` sink per
+  micro-batch (O15): the epoch is collected once, as Arrow, and every
+  sink (parquet tables, DuckDB/JDBC, report) is served from that table.
 - error side channel (O29, ref ErrorBus core/aggregator.go:24): rows that
   parse but carry an unparseable datetime keep flowing with
   ``_parse_error = true``; the sink routes them to a quarantine path
@@ -37,6 +38,8 @@ from __future__ import annotations
 from collections.abc import Callable
 from functools import reduce
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -49,9 +52,10 @@ from takuan_spark.sinks.writers import write_epoch
 #: input bytes one micro-batch takes from each sensor's chunk directory.
 #: A catch-up run (``--batch``, or a service started on a backlog) then
 #: drains the backlog as several epochs instead of one, which bounds what
-#: the driver collects per epoch: the DuckDB sink's event rows and the
-#: report hook's partial. The file source takes at least one whole file
-#: per epoch, so one file larger than this is still read in one epoch.
+#: the driver collects per epoch: ``split_sink``'s one Arrow table of the
+#: epoch, which every sink and the report hook are served from. The file
+#: source takes at least one whole file per epoch, so one file larger
+#: than this is still read in one epoch.
 MAX_EPOCH_BYTES = 64 * 1024 * 1024
 
 
@@ -115,23 +119,23 @@ def split_sink(
     events_path: str,
     quarantine_path: str,
     *,
-    post_hook: Callable[[DataFrame, int], None] | None = None,
+    post_hook: Callable[[pa.Table, int], None] | None = None,
 ) -> Callable[[DataFrame, int], None]:
-    """foreachBatch sink: one write per epoch puts good rows in the
-    date-partitioned events table and parse errors in quarantine (O29),
-    both exactly once under replay (``sinks/writers.py:write_epoch``).
-    ``post_hook`` is the report-job attachment point (the reference's
-    reporter goroutine); it gets the good rows of the persisted batch."""
+    """foreachBatch sink: collect the epoch once, as one Arrow table of
+    the event columns, ``_parse_error`` and ``event_date`` (one Spark
+    job), and serve every output from it. ``sinks/writers.py:write_epoch``
+    puts good rows in the date-partitioned events table and parse errors
+    in quarantine (O29), both exactly once under replay. ``post_hook``
+    is the DB-sink and report-job attachment point (the reference's
+    reporter goroutine); it gets the epoch's good rows, event columns
+    only, as a ``pa.Table`` (empty for an empty epoch)."""
 
     def _sink(batch: DataFrame, epoch_id: int) -> None:
-        batch = batch.persist()
-        try:
-            write_epoch(batch, events_path, quarantine_path, epoch_id)
-            if post_hook is not None:
-                good = batch.where(~F.col("_parse_error")).drop("_parse_error")
-                post_hook(good, epoch_id)
-        finally:
-            batch.unpersist()
+        table = batch.withColumn("event_date", F.to_date("created_at")).toArrow()
+        write_epoch(table, events_path, quarantine_path, epoch_id)
+        if post_hook is not None:
+            good = table.filter(pc.invert(table["_parse_error"]))
+            post_hook(good.drop_columns(["_parse_error", "event_date"]), epoch_id)
 
     return _sink
 
@@ -146,7 +150,7 @@ def start_pipeline(
     paths: dict[str, str] | None = None,
     geo_dim: DataFrame | None = None,
     available_now: bool = False,
-    post_hook: Callable[[DataFrame, int], None] | None = None,
+    post_hook: Callable[[pa.Table, int], None] | None = None,
     tail_files: bool = False,
 ) -> StreamingQuery:
     """Start the service. ``available_now=True`` drains the current

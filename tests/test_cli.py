@@ -132,9 +132,9 @@ def test_cli_batch_mode_with_jdbc_sink(spark, cli_env, capsys):
 
 def test_cli_one_epoch_drain_job_count(spark, cli_env, monkeypatch, capsys):
     """A one-epoch ``--batch`` drain with a DuckDB sink and a geo dim runs
-    at most 5 Spark jobs in its query's job group (the query's run id):
-    the geo broadcast, the staged write, the DuckDB Arrow collect and the
-    report hook's two."""
+    at most 2 Spark jobs in its query's job group (the query's run id):
+    the geo broadcast and the epoch's one Arrow collect, which the
+    parquet tables, the DuckDB sink and the report hook all read."""
     geo_csv = cli_env["tmp"] / "geo.csv"
     geo_csv.write_text("ip,country_code,country_name\n203.0.113.7,CN,China\n")
     queries = []
@@ -158,7 +158,32 @@ def test_cli_one_epoch_drain_job_count(spark, cli_env, monkeypatch, capsys):
     assert capsys.readouterr().out.startswith("3 events: 2 from")
     (query,) = queries
     jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(query.runId))
-    assert 0 < len(jobs) <= 5
+    assert 0 < len(jobs) <= 2
+
+
+def test_cli_one_epoch_drain_writes_one_file_per_directory(spark, cli_env, capsys):
+    """A one-epoch drain of three chunk files whose events span two
+    dates, plus parse errors, writes exactly 2 + 1 parquet files: one per
+    event date and one in quarantine, whatever the scan's task count."""
+    ssh = cli_env["tmp"] / "ssh-chunks"
+    for i in (2, 3):
+        (ssh / f"auth.log.{i}").write_text("\n".join([
+            "Aug 14 07:00:00 host1 sshd[2001]: Invalid user test from 192.0.2.5 port 22",
+            "Xxx 99 99:99:99 host1 sshd[3001]: Invalid user broken from 9.9.9.9 port 22",
+            *AUTH_LINES,
+        ]) + "\n")
+    rc = main(["--config", cli_env["cfg"], "--out", cli_env["out"], "--batch"])
+    assert rc == 0
+    assert capsys.readouterr().out.count("\n") == 1  # one epoch, one summary
+    out = cli_env["out"]
+    files = sorted(glob.glob(f"{out}/events/*/*.parquet") + glob.glob(f"{out}/quarantine/*"))
+    assert [f[len(out):] for f in files] == [
+        "/events/event_date=2026-08-13/epoch-0-0.parquet",
+        "/events/event_date=2026-08-14/epoch-0-0.parquet",
+        "/quarantine/epoch-0-0.parquet",
+    ]
+    assert spark.read.parquet(f"{out}/events").count() == 3 + 2 * 4
+    assert spark.read.parquet(f"{out}/quarantine").count() == 2
 
 
 def test_cli_batch_drain_is_bounded_per_epoch(spark, cli_env, monkeypatch, capsys):

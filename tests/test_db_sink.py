@@ -36,9 +36,10 @@ def _drain(spark, env):
     stream = spark.readStream.schema("address string, rule string").parquet(
         str(env["src"])
     )
+    sink = duckdb_exactly_once_sink(env["db"], "events")
     q = (
         stream.writeStream.foreachBatch(
-            duckdb_exactly_once_sink(env["db"], "events")
+            lambda batch, epoch_id: sink(batch.toArrow(), epoch_id)
         )
         .option("checkpointLocation", env["ckpt"])
         .trigger(availableNow=True)
@@ -70,7 +71,7 @@ def test_replayed_epoch_is_skipped(spark, env):
     sink = duckdb_exactly_once_sink(env["db"], "events")
     batch = spark.createDataFrame(
         [("1.1.1.1", "r"), ("2.2.2.2", "r")], "address string, rule string"
-    )
+    ).toArrow()
     sink(batch, 7)
     sink(batch, 7)  # replay
     sink(batch, 8)  # genuinely new epoch
@@ -102,9 +103,9 @@ def _land_after(spark, env, first):
     """Deliver ``first`` as epoch 0, then one geo-hit event as epoch 1;
     return the table's column types and row count."""
     sink = duckdb_exactly_once_sink(env["db"], "events")
-    sink(spark.createDataFrame(first, EVENT_SCHEMA), 0)
+    sink(spark.createDataFrame(first, EVENT_SCHEMA).toArrow(), 0)
     sink(spark.createDataFrame([_event("1.1.1.1", ("CN", "China"))],
-                               EVENT_SCHEMA), 1)
+                               EVENT_SCHEMA).toArrow(), 1)
     con = duckdb.connect(env["db"])
     try:
         types = dict(con.execute(
@@ -138,8 +139,8 @@ def test_pipeline_lands_exactly_once_across_restarts(spark, env, tmp_path,
                                                      config_path):
     """The service's sink chain (split_sink, then the DuckDB sink as its
     post hook) across restarts: a restart with no data is a no-op,
-    deltas land once in events, quarantine and DuckDB, and no stage is
-    left behind."""
+    deltas land once in events, quarantine and DuckDB, and no stage or
+    temp file is left behind."""
     import glob
 
     from takuan_spark.config import load_config
@@ -179,4 +180,6 @@ def test_pipeline_lands_exactly_once_across_restarts(spark, env, tmp_path,
     con = duckdb.connect(env["db"])
     assert con.sql("SELECT COUNT(*) FROM events").fetchone()[0] == 3
     con.close()
-    assert glob.glob(str(out / "events" / "_staging" / "*")) == []
+    assert not (out / "events" / "_staging").exists()
+    hidden = glob.glob(str(out / "events" / "*" / ".*"))
+    assert hidden + glob.glob(str(out / "quarantine" / ".*")) == []

@@ -2,8 +2,8 @@
 (O15/O17/O29): the service is made to fail once at a point inside
 ``foreachBatch``, rerun on the same checkpoint, and its events,
 quarantine, DuckDB and report outputs must hold each epoch once. The
-faults patch module attributes (or ``os.rename``/``os.replace``) in
-place, so ``main`` wires the service it always wires."""
+faults patch module attributes (or ``os.replace``) in place, so
+``main`` wires the service it always wires."""
 
 from __future__ import annotations
 
@@ -132,10 +132,14 @@ FAULTS = {
     # the report CSV is written but not yet renamed into place
     "report_csv_rename": _fail_os(
         "replace", lambda dst: "address_report_000001" in dst),
-    # epoch 1 spans two event dates and the quarantine: one of its staged
-    # files is published, the rest are not
+    # epoch 1 spans two event dates and the quarantine, one file each:
+    # the first is renamed into place, the second is not
     "between_publish_renames": _fail_os(
-        "rename", lambda dst: os.path.basename(dst).startswith("epoch-1-"), nth=2),
+        "replace", lambda dst: os.path.basename(dst).startswith("epoch-1-"), nth=2),
+    # epoch 1's first file is written under its hidden temp name, then
+    # the rename fails: the temp file is left behind
+    "temp_written_not_renamed": _fail_os(
+        "replace", lambda dst: os.path.basename(dst).startswith("epoch-1-")),
 }
 
 #: the per-epoch address report CSVs: no country without a geo dim
@@ -159,8 +163,11 @@ def _count(pattern: str) -> int:
     return duckdb.sql(sql).fetchone()[0]
 
 
-def _staged(events: str) -> list[str]:
-    return glob.glob(os.path.join(events, "_staging", "epoch=*"))
+def _leftovers(events: str, quarantine: str) -> list[str]:
+    """A ``_staging/`` directory or a hidden temp file left in the tables."""
+    return (glob.glob(os.path.join(events, "_staging"))
+            + glob.glob(os.path.join(events, "*", ".*"))
+            + glob.glob(os.path.join(quarantine, ".*")))
 
 
 @pytest.mark.parametrize("point", sorted(FAULTS))
@@ -180,6 +187,11 @@ def test_rerun_after_fault_is_exactly_once(spark, tmp_path, point, monkeypatch):
         FAULTS[point](m)
         with pytest.raises(Exception, match="injected fault"):
             cli.main(argv)  # epoch 1 fails before the checkpoint commit
+    if point == "temp_written_not_renamed":
+        # the stale temp file is invisible to both readers of the table
+        assert _leftovers(f"{out}/events", f"{out}/quarantine")
+        assert spark.read.parquet(f"{out}/events").count() == 3
+        assert _count(f"{out}/events/*/*.parquet") == 3
     assert cli.main(argv) == 0  # epoch 1 is replayed
 
     assert _count(f"{out}/events/*/*.parquet") == 5
@@ -196,7 +208,7 @@ def test_rerun_after_fault_is_exactly_once(spark, tmp_path, point, monkeypatch):
         assert os.listdir(f"{out}/reports/{name}") == ["part-00000.csv"]
         with open(f"{out}/reports/{name}/part-00000.csv") as fh:
             assert fh.read().splitlines() == rows
-    assert _staged(f"{out}/events") == []
+    assert _leftovers(f"{out}/events", f"{out}/quarantine") == []
 
 
 def _batch(spark, good: int, bad: int):
@@ -222,39 +234,38 @@ def test_split_sink_replay_writes_once(spark, tmp_path):
     assert _count(f"{events}/*/*.parquet") == 6
     assert _count(f"{quarantine}/*.parquet") == 4
     names = {os.path.basename(p) for p in glob.glob(f"{events}/*/*.parquet")}
-    assert {n.split("-", 2)[1] for n in names} == {"3", "4"}
-    assert _staged(events) == []
-    assert not os.path.exists(os.path.join(events, "_staging"))
+    assert names == {"epoch-3-0.parquet", "epoch-4-0.parquet"}
+    assert _leftovers(events, quarantine) == []
 
 
 def test_split_sink_all_quarantine_replay(spark, tmp_path):
     """An epoch with only parse errors fills quarantine alone, once, and
-    hands the hook an empty batch."""
+    hands the hook an empty table."""
     events, quarantine = str(tmp_path / "events"), str(tmp_path / "quarantine")
     seen = []
     sink = split_sink(events, quarantine,
-                      post_hook=lambda df, epoch: seen.append((epoch, df.count())))
+                      post_hook=lambda rows, epoch: seen.append((epoch, rows.num_rows)))
     batch = _batch(spark, good=0, bad=3)
     sink(batch, 0)
     sink(batch, 0)  # replay
     assert _count(f"{quarantine}/*.parquet") == 3
     assert _count(f"{events}/*/*.parquet") == 0
     assert seen == [(0, 0), (0, 0)]
-    assert _staged(events) == []
+    assert _leftovers(events, quarantine) == []
 
 
 def test_split_sink_survives_empty_epoch(spark, tmp_path):
-    """An empty micro-batch stages no files; publishing it is a no-op
-    that leaves no stage behind, and the epochs after it land once."""
+    """An empty micro-batch writes no files and leaves no temp file
+    behind, and the epochs after it land once."""
     events, quarantine = str(tmp_path / "events"), str(tmp_path / "quarantine")
     sink = split_sink(events, quarantine)
     empty = _batch(spark, good=0, bad=0)
     sink(empty, 0)
     sink(empty, 0)  # replay of the empty epoch
-    assert _staged(events) == []
+    assert not os.path.exists(events) and not os.path.exists(quarantine)
     full = _batch(spark, good=2, bad=1)
     sink(full, 1)
     sink(full, 1)  # replay
     assert _count(f"{events}/*/*.parquet") == 2
     assert _count(f"{quarantine}/*.parquet") == 1
-    assert _staged(events) == []
+    assert _leftovers(events, quarantine) == []

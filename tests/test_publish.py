@@ -98,7 +98,7 @@ def webhook():
 
 def test_report_hook_posts_webhook_summary(spark, events, tmp_path, webhook, capsys):
     url, received = webhook
-    _report_hook(str(tmp_path), url)(events, 7)
+    _report_hook(str(tmp_path), url)(events.toArrow(), 7)
 
     printed = capsys.readouterr().out.strip()
     assert printed.startswith("4 events:")
@@ -110,7 +110,7 @@ def test_report_hook_empty_batch_posts_and_prints_nothing(
     spark, events, tmp_path, webhook, capsys
 ):
     url, received = webhook
-    _report_hook(str(tmp_path), url)(events.where("address = 'none'"), 8)
+    _report_hook(str(tmp_path), url)(events.where("address = 'none'").toArrow(), 8)
 
     assert capsys.readouterr().out == ""
     assert received == []
@@ -123,7 +123,7 @@ def test_report_hook_survives_webhook_outage(spark, events, tmp_path, capsys):
     with socket.socket() as s:
         s.bind(("127.0.0.1", 0))
         port = s.getsockname()[1]
-    _report_hook(str(tmp_path), f"http://127.0.0.1:{port}/report")(events, 3)
+    _report_hook(str(tmp_path), f"http://127.0.0.1:{port}/report")(events.toArrow(), 3)
 
     captured = capsys.readouterr()
     assert captured.out.startswith("4 events:")

@@ -1,12 +1,12 @@
 """The service's per-epoch report hook (``__main__._report_hook``) against
 the Spark report queries it stands in for, and the number of Spark jobs
-it launches.
+it launches (none).
 
-The hook folds one Arrow-collected ``partial_report`` per epoch on the
-driver (``fold_partial``); over the same batch its CSV rows, printed summary and webhook
-``n_events`` must be what ``address_report``, ``country_topk`` and
-``count()`` give. Spark's CSV writer escapes quotes with a backslash and
-the hook's writer doubles them (RFC 4180); the reader below decodes both.
+The hook takes the epoch's events as an Arrow table and folds them on
+the driver (``epoch_partial``, ``fold_partial``); over the same batch
+its CSV rows, printed summary and webhook ``n_events`` must be what
+``address_report``, ``country_topk`` and ``count()`` give, and Spark's
+CSV writer must write the same report in the same RFC 4180 dialect.
 """
 
 from __future__ import annotations
@@ -26,10 +26,13 @@ from hypothesis import strategies as st
 from takuan_spark.__main__ import _report_hook
 from takuan_spark.operators.reports import (
     REPORT_COLUMNS,
+    _segment,
     address_report,
     country_topk,
+    epoch_partial,
     fold_partial,
     format_country_summary,
+    partial_report,
 )
 from takuan_spark.sinks import publish
 from takuan_spark.sinks.writers import write_csv_report
@@ -66,11 +69,7 @@ MIXED = _events([
     ("10.0.0.6", "DE", "Germany", [("ssh", "auth-failure", 1)]),
 ])
 
-# leading or trailing blanks and empty strings are left out: Spark's CSV
-# writer trims the one and quotes the other, so they do not read back
-# as they were written at the Spark-side report
-_NAMES = st.text(alphabet='ab é,"', min_size=1, max_size=6).filter(
-    lambda s: s == s.strip())
+_NAMES = st.text(alphabet='ab é,"', max_size=6)
 _COUNTRIES = st.one_of(
     st.just((None, None)),
     st.tuples(st.sampled_from(["AU", "BR", "CN", "DE", "FR", "JP", "US"]), _NAMES),
@@ -98,7 +97,7 @@ def batches(draw) -> list[tuple]:
 
 def _read_report(path: str) -> list[list[str]]:
     with open(path, newline="", encoding="utf-8") as fh:
-        return list(csv.reader(fh, escapechar="\\"))
+        return list(csv.reader(fh))
 
 
 @settings(max_examples=12, deadline=None)
@@ -112,10 +111,13 @@ def test_hook_matches_spark_report_queries(spark, rows):
                 pytest.MonkeyPatch.context() as m, \
                 contextlib.redirect_stdout(io.StringIO()) as printed:
             m.setattr(publish, "webhook_publisher", lambda url: sent.append)
-            _report_hook(out, "http://127.0.0.1:9/report")(batch, 5)
+            _report_hook(out, "http://127.0.0.1:9/report")(batch.toArrow(), 5)
             parts = glob.glob(f"{out}/address_report_000005.csv/part-*.csv")
             assert len(parts) == 1
             got = _read_report(parts[0])
+            write_csv_report(address_report(batch), f"{out}/spark")
+            (spark_part,) = glob.glob(f"{out}/spark/part-*.csv")
+            spark_csv = _read_report(spark_part)
         total = batch.count()
         want = [["" if v is None else str(v) for v in r]
                 for r in address_report(batch).collect()]
@@ -125,6 +127,7 @@ def test_hook_matches_spark_report_queries(spark, rows):
     assert got[0] == ["address", "country_code", "country_name",
                       "total_events", "counters"]
     assert got[1:] == want
+    assert spark_csv == got
     assert printed.getvalue() == status + "\n"
     assert sent == [{"epoch_id": 5, "n_events": total, "status": status}]
 
@@ -154,6 +157,25 @@ def test_fold_partial_orders_like_spark():
     assert (empty.num_rows, none) == (0, [])
 
 
+def test_epoch_partial_matches_spark_partial(spark):
+    """``epoch_partial`` gives ``partial_report``'s keys and counts, and
+    builds each segment as Spark's ``concat_ws`` does, a NULL sensor or
+    rule (or both) skipped."""
+    rows = MIXED + [("10.0.0.8", None, "auth-failure", None, None),
+                    ("10.0.0.8", "ssh", None, None, None),
+                    ("10.0.0.9", None, None, "FR", "France")] * 2
+    batch = spark.createDataFrame(rows, BATCH_SCHEMA)
+    cols = ["address", "country_code", "country_name", "segment", "n"]
+    want = partial_report(batch).select(
+        "address", "country_code", "country_name",
+        _segment("n").alias("segment"), "n").collect()
+    got = epoch_partial(batch.toArrow())
+    assert got.column_names == cols
+    assert sorted(got.to_pylist(), key=str) == sorted(
+        (r.asDict() for r in want), key=str)
+    assert {"auth-failure:2", "ssh:2", ":2"} <= set(got["segment"].to_pylist())
+
+
 def test_report_replaces_spark_named_part(spark, tmp_path):
     """A report directory an earlier build wrote through Spark's CSV
     writer (a ``part-00000-<uuid>-c000.csv`` name) holds only the new
@@ -164,7 +186,7 @@ def test_report_replaces_spark_named_part(spark, tmp_path):
         write_csv_report(address_report(batch), str(report_dir))
         assert glob.glob(f"{report_dir}/part-00000-*.csv")
         with contextlib.redirect_stdout(io.StringIO()):
-            _report_hook(str(tmp_path))(batch, 0)
+            _report_hook(str(tmp_path))(batch.toArrow(), 0)
         want = [["" if v is None else str(v) for v in r]
                 for r in address_report(batch).collect()]
     finally:
@@ -173,20 +195,17 @@ def test_report_replaces_spark_named_part(spark, tmp_path):
     assert _read_report(f"{report_dir}/part-00000.csv")[1:] == want
 
 
-def test_report_hook_runs_two_jobs(spark, tmp_path):
-    """One Spark query per epoch: the partial's map stage and its Arrow
-    collect. Everything else is folded on the driver."""
-    batch = spark.createDataFrame(MIXED, BATCH_SCHEMA).persist()
-    batch.count()
+def test_report_hook_runs_no_spark_job(spark, tmp_path):
+    """The hook folds the Arrow table it is handed on the driver: it
+    launches no Spark job."""
+    events = spark.createDataFrame(MIXED, BATCH_SCHEMA).toArrow()
     sc = spark.sparkContext
     sc.setJobGroup("report-hook-jobs", "report hook job count")
     try:
         with contextlib.redirect_stdout(io.StringIO()):
-            _report_hook(str(tmp_path))(batch, 0)
+            _report_hook(str(tmp_path))(events, 0)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-        batch.unpersist()
     assert glob.glob(f"{tmp_path}/address_report_000000.csv/part-*.csv")
-    jobs = sc.statusTracker().getJobIdsForGroup("report-hook-jobs")
-    assert 0 < len(jobs) <= 2
+    assert sc.statusTracker().getJobIdsForGroup("report-hook-jobs") == []

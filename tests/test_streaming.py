@@ -97,8 +97,8 @@ def test_quarantine_side_channel(spark, conf, env):
 def test_post_hook_reports_each_batch_once(spark, conf, env):
     calls: list[tuple[int, int]] = []
 
-    def hook(df, epoch):
-        calls.append((epoch, df.count()))
+    def hook(events, epoch):
+        calls.append((epoch, events.num_rows))
 
     (env["ssh"] / "chunk1.log").write_text(SSH_CHUNK_1)
     _run(spark, conf, env, post_hook=hook)
