@@ -1,14 +1,20 @@
 """Enrichment operators (SURVEY.md §2 O11, O12, O28).
 
 - metadata stamping: constant columns + processing time
-  (ref: core/sensor.go:90-96, core/aggregator.go:61).
+  (ref: core/sensor.go:90-96, core/aggregator.go:61). The streaming
+  service replaces ``detected_at`` with the epoch's batch timestamp on
+  the driver (``streaming/pipeline.py:split_sink``).
 - geo enrichment: the reference does a per-row in-process MaxMind lookup
-  (ref: core/aggregator.go:62-66). Spark-first that is a *broadcast left
-  outer join* against a geo dimension table: the dim ships once to every
-  executor, the probe stays in whole-stage codegen, and failed lookups
-  leave the columns NULL exactly like the reference's ``err == nil``
-  guard. At 100 TB the fact side streams through unchanged — no shuffle,
-  because the broadcast join requires none.
+  (ref: core/aggregator.go:62-66). For ``compile_batch`` that is a
+  *broadcast left outer join* against a geo dimension table: the dim
+  ships once to every executor, the probe stays in whole-stage codegen,
+  and failed lookups leave the columns NULL exactly like the reference's
+  ``err == nil`` guard. At 100 TB the fact side streams through
+  unchanged — no shuffle, because the broadcast join requires none. The
+  streaming service does the same lookup on the driver
+  (``streaming/pipeline.py:geo_table`` + ``split_sink``), against a dim
+  collected once per query: in a micro-batch the join's broadcast would
+  run again every epoch.
 - re-enrichment batch job (the ``-geo`` flag, ref: core/aggregator.go:
   174-209): full scan → join new dim → keep the new values where they
   changed → overwrite. Set-oriented MERGE instead of per-row UPDATEs.
@@ -106,7 +112,10 @@ def ip_range_enrich_bucketed(
 
 def stamp_metadata(df: DataFrame, *, sensor: str, node_name: str) -> DataFrame:
     """Stamp sensor name, node name and processing time (``detected_at``,
-    O11)."""
+    O11). In a micro-batch ``current_timestamp()`` is a literal that
+    changes every epoch, so the streaming service drops this column for
+    a NULL placeholder, which ``streaming/pipeline.py:split_sink`` sets
+    to the same value, the epoch's ``batchTimestampMs``."""
     return (
         df.withColumn("sensor", F.lit(sensor))
         .withColumn("node_name", F.lit(node_name))

@@ -20,9 +20,20 @@ The mapping, operator by operator:
   query/checkpoint drives all sensors — same as the reference's single
   aggregator loop.
 
-The *plan* is byte-identical to the batch one (compile_sensor); only the
-source binding differs. That is the whole point of building on
-DataFrames: batch replay and live tail share semantics by construction.
+Parse, rules and datetime are the batch plan (compile_sensor); only the
+source binding differs, so batch replay and live tail share those
+semantics by construction. Two columns are set on the driver instead,
+so that the only Spark work in a micro-batch is ``split_sink``'s one
+collect, and its generated code is the same in every epoch:
+
+- geo (O12, ref core/aggregator.go:62-66): ``start_pipeline`` loads the
+  geo dim once, as Arrow, and ``split_sink`` looks each address up in
+  it. A broadcast join would run its broadcast job again every epoch.
+- ``detected_at`` (O11, ref core/sensor.go:90-96): the streaming plan
+  carries a NULL placeholder and ``split_sink`` sets the epoch's batch
+  timestamp from the offset log, the value Spark's
+  ``current_timestamp()`` takes in a micro-batch. As a plan literal it
+  would change the generated code, and so recompile it, every epoch.
 
 Exactly-once (O16/O17): the checkpoint replays an uncommitted
 micro-batch under the same ``epoch_id`` (a replayable source), so every
@@ -35,6 +46,8 @@ report files are named by epoch. That is the reference's
 
 from __future__ import annotations
 
+import json
+import os
 from collections.abc import Callable
 from functools import reduce
 
@@ -45,7 +58,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from takuan_spark.config import PipelineConfig
-from takuan_spark.operators.enrich import geo_enrich
+from takuan_spark.operators.enrich import GEO_COLUMNS, geo_enrich
 from takuan_spark.plans.compiler import EVENT_COLUMNS, compile_sensor
 from takuan_spark.sinks.writers import write_epoch
 
@@ -77,6 +90,10 @@ def compile_stream(
     live log file consumed by the byte-offset ``filetail`` source
     (``sources/tail_source.py``) — the reference sensor's exact
     single-file semantics including truncation reset (O1/O2/O3).
+
+    ``geo_dim`` joins the dim into the plan (:func:`geo_enrich`).
+    :func:`start_pipeline` does not pass it: it looks geo up on the
+    driver instead.
     """
     if tail_files:
         from takuan_spark.sources.tail_source import register_filetail
@@ -115,23 +132,91 @@ def compile_stream(
     return events
 
 
+def geo_table(geo_dim: DataFrame) -> pa.Table:
+    """The geo dim ``(ip, country_code, country_name)`` collected once, as
+    strings, for :func:`split_sink`'s driver-side lookup. Rows with a
+    NULL ``ip`` are dropped: no address matches them, as in the join. A
+    repeated ``ip`` raises ``ValueError``: the reference makes one lookup
+    per event, where a join would duplicate the event."""
+    table = geo_dim.select(
+        *[F.col(c).cast("string") for c in ("ip", *GEO_COLUMNS)]
+    ).toArrow()
+    table = table.filter(pc.is_valid(table["ip"]))
+    counts = pc.value_counts(table["ip"])
+    repeated = counts.filter(pc.greater(counts.field("counts"), 1))
+    if len(repeated):
+        raise ValueError(
+            f"geo dim repeats ip {repeated[0]['values'].as_py()!r}: "
+            "each ip must map to one country"
+        )
+    return table
+
+
+def _lookup_geo(table: pa.Table, geo: pa.Table) -> pa.Table:
+    """``table`` with its country columns looked up by ``address`` in
+    ``geo``: same rows, same order; a miss or a NULL address gets NULLs."""
+    idx = pc.index_in(table["address"], value_set=geo["ip"], skip_nulls=True)
+    for name in GEO_COLUMNS:
+        i = table.schema.get_field_index(name)
+        table = table.set_column(i, name, pc.take(geo[name], idx))
+    return table
+
+
+def _batch_timestamp_ms(checkpoint_path: str, epoch_id: int) -> int:
+    """The epoch's ``batchTimestampMs`` from ``<checkpoint>/offsets/<N>``
+    (a local path): the value of ``current_timestamp()`` in that
+    micro-batch. Spark writes the entry before it runs the batch and
+    reads it back on a replay, so a replayed epoch gets the same value."""
+    with open(os.path.join(checkpoint_path, "offsets", str(epoch_id))) as fh:
+        version = fh.readline().rstrip("\n")
+        if version != "v1":
+            raise ValueError(
+                f"offset log entry {epoch_id} under {checkpoint_path} has "
+                f"version {version!r}, expected 'v1'"
+            )
+        return json.loads(fh.readline())["batchTimestampMs"]
+
+
+def _stamp_detected_at(table: pa.Table, ms: int) -> pa.Table:
+    ts = pa.scalar(ms * 1000, pa.timestamp("us", tz="UTC"))
+    return table.set_column(
+        table.schema.get_field_index("detected_at"),
+        pa.field("detected_at", ts.type, nullable=False),
+        pa.repeat(ts, table.num_rows),
+    )
+
+
 def split_sink(
     events_path: str,
     quarantine_path: str,
     *,
     post_hook: Callable[[pa.Table, int], None] | None = None,
+    geo: pa.Table | None = None,
+    checkpoint_path: str | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch sink: collect the epoch once, as one Arrow table of
     the event columns, ``_parse_error`` and ``event_date`` (one Spark
-    job), and serve every output from it. ``sinks/writers.py:write_epoch``
-    puts good rows in the date-partitioned events table and parse errors
-    in quarantine (O29), both exactly once under replay. ``post_hook``
-    is the DB-sink and report-job attachment point (the reference's
-    reporter goroutine); it gets the epoch's good rows, event columns
-    only, as a ``pa.Table`` (empty for an empty epoch)."""
+    job), and serve every output from it.
+
+    With ``checkpoint_path``, every row's ``detected_at`` is set to the
+    epoch's ``batchTimestampMs`` from the offset log; without it, the
+    batch keeps its own. With ``geo`` (:func:`geo_table`), every row,
+    quarantine included, gets its country columns from the lookup.
+    ``sinks/writers.py:write_epoch`` then puts good rows in the
+    date-partitioned events table and parse errors in quarantine (O29),
+    both exactly once under replay. ``post_hook`` is the DB-sink and
+    report-job attachment point (the reference's reporter goroutine); it
+    gets the epoch's good rows, event columns only, as a ``pa.Table``
+    (empty for an empty epoch)."""
 
     def _sink(batch: DataFrame, epoch_id: int) -> None:
         table = batch.withColumn("event_date", F.to_date("created_at")).toArrow()
+        if checkpoint_path is not None:
+            table = _stamp_detected_at(
+                table, _batch_timestamp_ms(checkpoint_path, epoch_id)
+            )
+        if geo is not None:
+            table = _lookup_geo(table, geo)
         write_epoch(table, events_path, quarantine_path, epoch_id)
         if post_hook is not None:
             good = table.filter(pc.invert(table["_parse_error"]))
@@ -158,12 +243,27 @@ def start_pipeline(
     the config's flush period, exactly the reference's DB-flush ticker.
     ``tail_files=True`` tails single live log files byte-by-byte
     (see :func:`compile_stream`).
+
+    ``geo_dim`` is collected once, here (:func:`geo_table`, one Spark
+    job; a repeated ``ip`` raises before the query starts), and
+    :func:`split_sink` looks geo up on the driver. The streaming plan
+    carries ``detected_at`` as a NULL placeholder, which
+    :func:`split_sink` sets from the checkpoint's offset log. Each
+    micro-batch then runs one Spark job, whose generated code is
+    compiled once per query.
     """
+    geo = geo_table(geo_dim) if geo_dim is not None else None
     events = compile_stream(
-        spark, config, paths=paths, geo_dim=geo_dim, tail_files=tail_files
-    )
+        spark, config, paths=paths, tail_files=tail_files
+    ).withColumn("detected_at", F.lit(None).cast("timestamp"))
     writer = events.writeStream.foreachBatch(
-        split_sink(events_path, quarantine_path, post_hook=post_hook)
+        split_sink(
+            events_path,
+            quarantine_path,
+            post_hook=post_hook,
+            geo=geo,
+            checkpoint_path=checkpoint_path,
+        )
     ).option("checkpointLocation", checkpoint_path)
     if available_now:
         writer = writer.trigger(availableNow=True)

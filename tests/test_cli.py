@@ -7,10 +7,12 @@ mode."""
 from __future__ import annotations
 
 import glob
+import os
 
 import pandas as pd
 import pytest
 
+import takuan_spark.__main__ as cli
 import takuan_spark.streaming.pipeline as pipeline
 from takuan_spark.__main__ import main
 
@@ -132,9 +134,10 @@ def test_cli_batch_mode_with_jdbc_sink(spark, cli_env, capsys):
 
 def test_cli_one_epoch_drain_job_count(spark, cli_env, monkeypatch, capsys):
     """A one-epoch ``--batch`` drain with a DuckDB sink and a geo dim runs
-    at most 2 Spark jobs in its query's job group (the query's run id):
-    the geo broadcast and the epoch's one Arrow collect, which the
-    parquet tables, the DuckDB sink and the report hook all read."""
+    exactly 1 Spark job in its query's job group (the query's run id):
+    the epoch's one Arrow collect, which the geo lookup, the parquet
+    tables, the DuckDB sink and the report hook all read. The geo dim is
+    collected once, before the query starts."""
     geo_csv = cli_env["tmp"] / "geo.csv"
     geo_csv.write_text("ip,country_code,country_name\n203.0.113.7,CN,China\n")
     queries = []
@@ -158,7 +161,63 @@ def test_cli_one_epoch_drain_job_count(spark, cli_env, monkeypatch, capsys):
     assert capsys.readouterr().out.startswith("3 events: 2 from")
     (query,) = queries
     jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(query.runId))
-    assert 0 < len(jobs) <= 2
+    assert len(jobs) == 1
+
+
+def test_cli_drain_compiles_generated_code_once(spark, cli_env, monkeypatch, capsys):
+    """A three-epoch ``--batch`` drain with a DuckDB sink and a geo dim
+    runs the same generated code in every epoch: after the first epoch,
+    Spark's code generator compiles nothing."""
+    ssh = cli_env["tmp"] / "ssh-chunks"
+    for i in (2, 3):
+        (ssh / f"auth.log.{i}").write_text("\n".join(AUTH_LINES) + "\n")
+    geo_csv = cli_env["tmp"] / "geo.csv"
+    geo_csv.write_text("ip,country_code,country_name\n203.0.113.7,CN,China\n")
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = codegen.METRIC_COMPILATION_TIME()  # one count per compile
+    counts = []
+    report_hook = cli._report_hook
+
+    def counting(*args, **kwargs):
+        hook = report_hook(*args, **kwargs)
+
+        def run(events, epoch_id: int) -> None:
+            hook(events, epoch_id)
+            counts.append(compiles.getCount())
+
+        return run
+
+    monkeypatch.setattr(pipeline, "MAX_EPOCH_BYTES", 1)
+    monkeypatch.setattr(cli, "_report_hook", counting)
+    rc = main(
+        [
+            "--config", cli_env["cfg"],
+            "--out", cli_env["out"],
+            "--batch",
+            "--db", str(cli_env["tmp"] / "events.duckdb"),
+            "--geo-dim", str(geo_csv),
+        ]
+    )
+    assert rc == 0
+    assert len(counts) == 3
+    assert [c - counts[0] for c in counts] == [0, 0, 0]
+
+
+def test_cli_repeated_geo_ip_fails_before_the_query_starts(spark, cli_env):
+    """A geo dim that maps one ip twice would duplicate that ip's events
+    (the reference makes one lookup per event): the service refuses it
+    at start, naming the ip, and no checkpoint is made."""
+    geo_csv = cli_env["tmp"] / "geo.csv"
+    geo_csv.write_text(
+        "ip,country_code,country_name\n"
+        "203.0.113.7,CN,China\n198.51.100.23,US,United States\n"
+        "203.0.113.7,JP,Japan\n"
+    )
+    argv = ["--config", cli_env["cfg"], "--out", cli_env["out"], "--batch",
+            "--geo-dim", str(geo_csv)]
+    with pytest.raises(ValueError, match=r"'203\.0\.113\.7'"):
+        main(argv)
+    assert not os.path.exists(f"{cli_env['out']}/checkpoint")
 
 
 def test_cli_one_epoch_drain_writes_one_file_per_directory(spark, cli_env, capsys):

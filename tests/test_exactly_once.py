@@ -9,10 +9,12 @@ from __future__ import annotations
 
 import datetime as dt
 import glob
+import json
 import os
 
 import duckdb
 import pytest
+from pyspark.sql import functions as F
 
 import takuan_spark.__main__ as cli
 from takuan_spark.sinks import db
@@ -163,6 +165,36 @@ def _count(pattern: str) -> int:
     return duckdb.sql(sql).fetchone()[0]
 
 
+def _offset_ms(out: str, epoch: int) -> int:
+    """``batchTimestampMs`` of ``offsets/<epoch>`` in the service's checkpoint."""
+    with open(f"{out}/checkpoint/offsets/{epoch}") as fh:
+        assert fh.readline() == "v1\n"
+        return json.loads(fh.readline())["batchTimestampMs"]
+
+
+def _file_ms(out: str, epoch: int) -> set[int]:
+    """The ``detected_at`` values, in ms, of epoch ``epoch``'s events and
+    quarantine files."""
+    files = glob.glob(f"{out}/events/*/epoch-{epoch}-0.parquet")
+    files += glob.glob(f"{out}/quarantine/epoch-{epoch}-0.parquet")
+    sql = f"SELECT DISTINCT epoch_ms(detected_at) FROM read_parquet({files!r})"
+    return {r[0] for r in duckdb.sql(sql).fetchall()}
+
+
+def _db_ms(dbf: str) -> dict[int, set[int]]:
+    """The ``detected_at`` values, in ms, of each epoch's DuckDB rows."""
+    con = duckdb.connect(dbf, read_only=True)
+    try:
+        rows = con.execute(
+            "SELECT payload, epoch_ms(detected_at) FROM events").fetchall()
+    finally:
+        con.close()
+    got: dict[int, set[int]] = {}
+    for payload, ms in rows:
+        got.setdefault(0 if payload in CHUNK_0 else 1, set()).add(ms)
+    return got
+
+
 def _leftovers(events: str, quarantine: str) -> list[str]:
     """A ``_staging/`` directory or a hidden temp file left in the tables."""
     return (glob.glob(os.path.join(events, "_staging"))
@@ -187,6 +219,7 @@ def test_rerun_after_fault_is_exactly_once(spark, tmp_path, point, monkeypatch):
         FAULTS[point](m)
         with pytest.raises(Exception, match="injected fault"):
             cli.main(argv)  # epoch 1 fails before the checkpoint commit
+    committed = _db_ms(dbf)
     if point == "temp_written_not_renamed":
         # the stale temp file is invisible to both readers of the table
         assert _leftovers(f"{out}/events", f"{out}/quarantine")
@@ -209,6 +242,13 @@ def test_rerun_after_fault_is_exactly_once(spark, tmp_path, point, monkeypatch):
         with open(f"{out}/reports/{name}/part-00000.csv") as fh:
             assert fh.read().splitlines() == rows
     assert _leftovers(f"{out}/events", f"{out}/quarantine") == []
+    # every row of an epoch carries its offset log's batch timestamp, and
+    # a replayed epoch's files carry what its committed DB rows do
+    offsets = {epoch: _offset_ms(out, epoch) for epoch in (0, 1)}
+    assert {epoch: _file_ms(out, epoch) for epoch in (0, 1)} == {
+        epoch: {ms} for epoch, ms in offsets.items()}
+    assert _db_ms(dbf) == {epoch: {ms} for epoch, ms in offsets.items()}
+    assert {epoch: _file_ms(out, epoch) for epoch in committed} == committed
 
 
 def _batch(spark, good: int, bad: int):
@@ -269,3 +309,26 @@ def test_split_sink_survives_empty_epoch(spark, tmp_path):
     assert _count(f"{events}/*/*.parquet") == 2
     assert _count(f"{quarantine}/*.parquet") == 1
     assert _leftovers(events, quarantine) == []
+
+
+def test_split_sink_stamps_the_offset_log_batch_timestamp(spark, tmp_path):
+    """With a checkpoint, every row of the epoch, quarantine included,
+    gets ``batchTimestampMs`` of ``offsets/<N>`` as ``detected_at``; an
+    offset log entry of another version raises and writes nothing."""
+    events, quarantine = str(tmp_path / "events"), str(tmp_path / "quarantine")
+    offsets = tmp_path / "ckpt" / "offsets"
+    offsets.mkdir(parents=True)
+    ms = 1786601701234
+    meta = json.dumps({"batchWatermarkMs": 0, "batchTimestampMs": ms})
+    (offsets / "0").write_text(f"v1\n{meta}\n{{}}\n")
+    (offsets / "1").write_text(f"v2\n{meta}\n{{}}\n")
+    sink = split_sink(events, quarantine, checkpoint_path=str(tmp_path / "ckpt"))
+    batch = _batch(spark, good=2, bad=1).withColumn(
+        "detected_at", F.lit(None).cast("timestamp"))
+    sink(batch, 0)
+    for pattern in (f"{events}/*/*.parquet", f"{quarantine}/*.parquet"):
+        sql = f"SELECT DISTINCT epoch_ms(detected_at) FROM read_parquet('{pattern}')"
+        assert duckdb.sql(sql).fetchall() == [(ms,)]
+    with pytest.raises(ValueError, match="'v2'"):
+        sink(batch, 1)
+    assert not glob.glob(f"{events}/*/epoch-1-*") + glob.glob(f"{quarantine}/epoch-1-*")

@@ -5,11 +5,18 @@ analog: each batch reported exactly once via the checkpoint)."""
 
 from __future__ import annotations
 
+import datetime as dt
+
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from takuan_spark.__main__ import _load_geo_dim
 from takuan_spark.config import load_config
+from takuan_spark.operators.enrich import GEO_COLUMNS, geo_enrich
+from takuan_spark.plans.compiler import EVENT_COLUMNS
 from takuan_spark.streaming import start_pipeline
+from takuan_spark.streaming.pipeline import geo_table, split_sink
 
 YEAR = 2026
 
@@ -109,3 +116,63 @@ def test_post_hook_reports_each_batch_once(spark, conf, env):
     calls.clear()
     _run(spark, conf, env, post_hook=hook)
     assert sum(n for _, n in calls) == 0
+
+
+GEO_ROWS = [  # (ip, country_code, country_name); a NULL ip matches nothing
+    ("203.0.113.7", "CN", "China"),
+    ("192.0.2.5", "US", "United States"),
+    (None, "XX", "Nowhere"),
+]
+
+
+def _geo_dim(spark, tmp_path, fmt):
+    """The geo dim as ``main`` loads it: a CSV (every column a string) or
+    a parquet file with one more column than the lookup reads."""
+    path = str(tmp_path / f"geo.{fmt}")
+    if fmt == "csv":
+        with open(path, "w") as fh:
+            fh.write("ip,country_code,country_name\n")
+            fh.writelines(f"{ip or ''},{cc},{cn}\n" for ip, cc, cn in GEO_ROWS)
+    else:
+        spark.createDataFrame(
+            [(*row, 64500 + i) for i, row in enumerate(GEO_ROWS)],
+            "ip string, country_code string, country_name string, asn int",
+        ).write.parquet(path)
+    return _load_geo_dim(spark, path)
+
+
+@pytest.mark.parametrize("fmt", ["csv", "parquet"])
+def test_driver_geo_lookup_matches_geo_enrich(spark, tmp_path, fmt):
+    """``split_sink``'s driver-side lookup gives every row, quarantine
+    included, the country columns the broadcast join gives it: a hit, a
+    miss, a NULL address and a quarantined hit, in the batch's order."""
+    t = dt.datetime(2026, 8, 13, 6, 15)
+    rows = [  # created_at, address, payload, _parse_error
+        (t, "203.0.113.7", "hit", False),
+        (t, "198.51.100.23", "miss", False),
+        (t, None, "null address", False),
+        (None, "192.0.2.5", "quarantined hit", True),
+    ]
+    schema = ", ".join(
+        f"{c} timestamp" if c in ("created_at", "detected_at", "reported_at")
+        else f"{c} string" for c in EVENT_COLUMNS) + ", _parse_error boolean"
+    batch = spark.createDataFrame(
+        [(c, t, "node", a, None, None, "ssh", "r", p, None, e)
+         for c, a, p, e in rows], schema)
+    geo_dim = _geo_dim(spark, tmp_path, fmt)
+    key = ("payload", "address", *GEO_COLUMNS, "_parse_error")
+    joined = geo_enrich(batch.drop(*GEO_COLUMNS), geo_dim).select(*key)
+    expected = sorted(tuple(r) for r in joined.collect())
+
+    events, quarantine = str(tmp_path / "events"), str(tmp_path / "quarantine")
+    seen = []
+    split_sink(events, quarantine, geo=geo_table(geo_dim),
+               post_hook=lambda good, epoch: seen.append(good))(batch, 0)
+    got = [
+        (*(r[c] for c in key[:-1]), error)
+        for path, error in ((events, False), (quarantine, True))
+        for r in pq.read_table(path).to_pylist()
+    ]
+    assert sorted(got) == expected
+    assert [r["payload"] for r in seen[0].to_pylist()] == ["hit", "miss", "null address"]
+    assert [r["country_code"] for r in seen[0].to_pylist()] == ["CN", None, None]
