@@ -18,8 +18,7 @@ This package re-expresses that service Spark-first
                    first-match-wins predicate labeling), enrich (broadcast
                    geo / reverse-DNS joins), reports (the one
                    per-address report fold and country top-k).
-- ``sources``    — batch JSON/CSV readers and the byte-offset file-tail
-                   data source.
+- ``sources``    — the byte-offset file-tail data source.
 - ``sinks``      — parquet/CSV writers, the exactly-once DuckDB and JDBC
                    sinks, and the report publishers (file drop, git,
                    webhook).

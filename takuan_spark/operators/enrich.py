@@ -65,51 +65,6 @@ def ip_range_enrich(
     return events.join(dim, cond, "left").drop(lo_col, hi_col)
 
 
-def ip_range_enrich_bucketed(
-    events: DataFrame,
-    ranges: DataFrame,
-    *,
-    ip_col: str = "address",
-    lo_col: str = "ip_lo",
-    hi_col: str = "ip_hi",
-    bucket_bits: int = 8,
-) -> DataFrame:
-    """Range lookup as an equi-join — the 100 TB path for O12.
-
-    Both sides are bucketed by the top ``bucket_bits`` of the 32-bit
-    address (a range spanning several buckets is exploded into one row
-    per bucket), and the join is *equi on the bucket* with the range
-    test as a residual join filter. Catalyst plans a hash/sort-merge
-    join instead of a nested loop, so the work per fact row is one hash
-    probe + a few range checks — and unlike the broadcast form it
-    shuffles, scales past broadcast-able dim sizes, and skew-splits
-    under AQE. Semantics identical to :func:`ip_range_enrich` (left
-    outer, all matching ranges).
-    """
-    shift = 32 - bucket_bits
-    ev = events.withColumn("_ipl", ip_to_long(F.col(ip_col))).withColumn(
-        "_bkt", F.shiftright(F.col("_ipl"), shift)
-    )
-    rng = ranges.withColumn(
-        "_bkt",
-        F.explode(
-            F.sequence(
-                F.shiftright(F.col(lo_col), shift),
-                F.shiftright(F.col(hi_col), shift),
-            )
-        ),
-    )
-    cond = (
-        (ev["_bkt"] == rng["_bkt"])
-        & (ev["_ipl"] >= rng[lo_col])
-        & (ev["_ipl"] <= rng[hi_col])
-    )
-    return (
-        ev.join(rng, cond, "left")
-        .drop("_bkt", "_ipl", lo_col, hi_col)
-    )
-
-
 def stamp_metadata(df: DataFrame, *, sensor: str, node_name: str) -> DataFrame:
     """Stamp sensor name, node name and processing time (``detected_at``,
     O11). In a micro-batch ``current_timestamp()`` is a literal that
@@ -171,8 +126,8 @@ def geo_dim_from_mmdb(spark, mmdb_path: str, *, reader_factory=None):
     """Convert a MaxMind country database (the reference's
     ``database.geoip`` file, ref core/aggregator.go:154-157 +
     config.example.yml:7) into the (ip_lo, ip_hi, country_code,
-    country_name) range-dim DataFrame that :func:`ip_range_enrich` and
-    its bucketed form consume.
+    country_name) range-dim DataFrame that :func:`ip_range_enrich`
+    consumes.
 
     The mmdb is a prefix trie over CIDR networks; flattening it to
     [network_start, network_end] rows turns the longest-prefix lookup

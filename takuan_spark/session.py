@@ -39,29 +39,6 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Let the planner pick shuffled-hash join when one side's
-        # per-partition build fits in memory, and let AQE convert
-        # sort-merge to shuffled-hash at runtime when every post-shuffle
-        # partition is under 128 MB: drops the per-side sorts (measured
-        # ns_boilerplate_strip 4 SortMergeJoin -> 4 ShuffledHashJoin,
-        # ~6% off the join-heavy panel; CPU x rows saved scales with
-        # data). Equal-size-side joins still plan as sort-merge; AQE
-        # skew splitting bounds the build-side partitions either way.
-        .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            str(128 * 1024 * 1024),
-        )
-        # Whole-stage codegen is silently DISABLED for any stage whose
-        # subtree carries more than maxFields (default 100) fields, and
-        # the MinHash signature aggregate (64 min() buffers + keys)
-        # plus every sketch panel sits right over that line — measured
-        # 5.1 s -> 2.9 s on the sf0.1 signature build once codegen
-        # applies. Pure CPU-per-row win: the same fallback costs
-        # proportionally more at 100 TB. 500 keeps a hard ceiling so a
-        # pathological 10k-column plan still falls back instead of
-        # compiling forever.
-        .config("spark.sql.codegen.maxFields", "500")
         # Split even small text/csv/json files across all slots at the
         # SCAN (no shuffle): a single 10 MB log file is otherwise one
         # split, serializing the regex-parse hot path on one core. On

@@ -1,17 +1,18 @@
 """Ingest-format queries: the engine's file-format surface under the
 driver's oracle gate.
 
-The sources module (sources/readers.py) reads parquet/JSON/CSV/ORC;
-pytest covers each reader, but a reader's PERMISSIVE quarantine path —
-the part that matters when 100 TB of scraped JSONL contains garbage
-lines — deserves a driver-checked row too. The round-trip query below
-writes the documents table as JSONL plus deterministic corrupt lines,
-reads it back through the real reader with an explicit schema and the
-default `_corrupt_record` quarantine column (the name PERMISSIVE mode
-routes malformed lines to — a differently-named field silently stays
-NULL and corrupt rows masquerade as all-NULL data), and returns good rows + a quarantine-count
-sentinel — so schema projection, parse, and quarantine are all
-value-checked against an engine that never saw the files.
+The zoo's readers (takuan_zoo/sources/readers.py) read
+parquet/JSON/CSV/ORC; pytest covers each reader, but a reader's
+PERMISSIVE quarantine path — the part that matters when 100 TB of
+scraped JSONL contains garbage lines — deserves a driver-checked row
+too. The round-trip query below writes the documents table as JSONL plus
+deterministic corrupt lines, reads it back through the real reader with
+an explicit schema and the default `_corrupt_record` quarantine column
+(the name PERMISSIVE mode routes malformed lines to — a
+differently-named field silently stays NULL and corrupt rows masquerade
+as all-NULL data), and returns good rows + a quarantine-count sentinel —
+so schema projection, parse, and quarantine are all value-checked
+against an engine that never saw the files.
 """
 
 from __future__ import annotations
@@ -72,7 +73,7 @@ def _append_corrupt_lines(path: str, lines: list[str]) -> None:
     "landing files with per-record quarantine, no driver state.",
 )
 def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from takuan_spark.sources.readers import read_json
+    from takuan_zoo.sources.readers import read_json
 
     path = _scratch(sf_dir, "jsonl")
     docs = load_table(spark, sf_dir, "documents")
@@ -145,7 +146,7 @@ _CORRUPT_CSV_LINES = [
     "instead.",
 )
 def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from takuan_spark.sources.readers import read_csv
+    from takuan_zoo.sources.readers import read_csv
 
     path = _scratch(sf_dir, "csv")
     docs = load_table(spark, sf_dir, "documents")

@@ -1,1 +1,1 @@
-"""Zoo-only readers (ORC, Avro)."""
+"""Zoo-only readers (JSON, CSV, ORC, Avro)."""

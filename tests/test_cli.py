@@ -6,8 +6,12 @@ mode."""
 
 from __future__ import annotations
 
+import csv
 import glob
 import os
+import subprocess
+import sys
+from pathlib import Path
 
 import pandas as pd
 import pytest
@@ -15,6 +19,7 @@ import pytest
 import takuan_spark.__main__ as cli
 import takuan_spark.streaming.pipeline as pipeline
 from takuan_spark.__main__ import main
+from takuan_spark.queries import REGISTRY, _load
 
 CONFIG_TMPL = """
 name: 'cli-test-node'
@@ -368,3 +373,54 @@ def test_cli_sql_mode_view_name_collision_is_error(spark, tmp_path, capsys):
     assert rc == 2
     err = capsys.readouterr().err
     assert "a_b" in err and "rename" in err
+
+
+def test_cli_list_queries_prints_the_registry(capsys):
+    assert main(["--list-queries"]) == 0
+    names = [line.split("\t")[0] for line in capsys.readouterr().out.splitlines()]
+    _load()
+    assert names == sorted(REGISTRY)
+
+
+def test_cli_list_queries_lists_only_the_service_queries():
+    # A fresh interpreter: the zoo registers into the same REGISTRY once
+    # any test in this session has imported it, but the CLI never does.
+    _load()
+    service = sorted(
+        n for n, s in REGISTRY.items()
+        if s.builder.__module__ == "takuan_spark.queries.takuan"
+    )
+    out = subprocess.run(
+        [sys.executable, "-m", "takuan_spark", "--list-queries"],
+        cwd=Path(__file__).resolve().parents[1],
+        capture_output=True,
+        text=True,
+        check=True,
+        timeout=120,
+    ).stdout
+    assert [line.split("\t")[0] for line in out.splitlines()] == service
+    assert len(service) == 10
+
+
+def test_cli_query_mode_prints_the_builder_rows(spark, sf_dir, capsys):
+    rc = main(["--query", "takuan_country_topk", "--sf-dir", sf_dir])
+    assert rc == 0
+    got = list(csv.reader(capsys.readouterr().out.splitlines()))
+    df = REGISTRY["takuan_country_topk"].builder(spark, sf_dir)
+    assert got == [df.columns] + [[str(v) for v in row] for row in df.collect()]
+    assert len(got) > 1
+
+
+@pytest.mark.parametrize(
+    "argv",
+    [
+        ["--query", "no_such_query", "--sf-dir", "/nonexistent"],
+        ["--query", "takuan_country_topk"],
+    ],
+    ids=["unknown_query", "missing_sf_dir"],
+)
+def test_cli_query_mode_errors_return_2(argv, capsys):
+    assert main(argv) == 2
+    captured = capsys.readouterr()
+    assert captured.out == ""
+    assert captured.err.startswith("error: ")
